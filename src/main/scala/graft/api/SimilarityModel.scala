@@ -51,12 +51,18 @@ object SimilarityModel {
     (fromStats(next), next)
   }
 
-  /** Serving handle over a persisted store (EP-3). */
+  /** Serving handle over a persisted store (EP-3). The handle reads the
+    * store as it is when first used: its first `retrieve` collects the
+    * dictionary once and ships it to the executors (a Spark broadcast,
+    * `Serving.ItemDictionary`); every `retrieve` after that is one Spark
+    * job over `similar_items` alone. Open a new handle to serve a
+    * rewritten store. */
   final case class Store(spark: SparkSession, path: String) {
     private lazy val sim = SimilarityStore.readSimilarItems(spark, path)
     private lazy val dict = SimilarityStore.readCorrelatedItems(spark, path)
+    private lazy val keys = Serving.itemDictionary(dict)
     def retrieve(itemId: Long, limit: Option[Int] = None): DataFrame =
-      Serving.retrieveSimilarItems(sim, dict, itemId, limit)
+      Serving.retrieveSimilarItems(sim, keys, itemId, limit)
     def itemInfo(ids: Seq[Long]): DataFrame = Serving.getItemInfo(dict, ids)
     def search(term: String, limit: Int = 10): DataFrame =
       Serving.searchItemsByName(dict, term, limit)

@@ -93,13 +93,8 @@ object Caches {
       _ => scala.collection.mutable.Buffer.empty)
     val canon = df.queryExecution.analyzed.canonicalized
     buf.find(_._1 == canon) match {
-      case Some((_, pinned)) =>
-        if (sys.env.contains("GRAFT_PIN_DEBUG"))
-          System.err.println(s"[pinPlan] HIT ${canon.schemaString.take(80)}")
-        pinned
+      case Some((_, pinned)) => pinned
       case None =>
-        if (sys.env.contains("GRAFT_PIN_DEBUG"))
-          System.err.println(s"[pinPlan] MISS (have ${buf.size}) ${canon.schemaString.take(80)}")
         val pinned = cacheOnce(df).localCheckpoint(eager = false)
         buf += ((canon, pinned))
         pinned

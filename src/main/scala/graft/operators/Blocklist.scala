@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +32,7 @@ object Blocklist {
   def flags(df: DataFrame, textCol: String, idCols: Seq[String],
             words: Seq[String]): DataFrame = {
     require(words.nonEmpty, "blocklist: empty word list")
-    val w = typedlit(words.map(_.toLowerCase).distinct.sorted)
+    val w = typedlit(words.map(_.toLowerCase(Locale.ROOT)).distinct.sorted)
     val lowered = transform(tokensWs(col(textCol)), t => lower(t))
     df.select(idCols.map(col) :+ lowered.as("__lt"): _*)
       .select(idCols.map(col) ++ Seq(

@@ -314,11 +314,11 @@ object ParityQueries extends QueryPack {
         .select(col("item_a"), col("item_b"), round(col("corr"), 6).as("corr"))
         .orderBy(col("item_a"), col("corr").desc_nulls_last, col("item_b"))),
 
-    // EP-3 serving: point lookup + broadcast dict join + top-10 (OP-14/16/24/26).
+    // EP-3 serving: point lookup + broadcast dictionary probe + top-10 (OP-14/16/24/26).
     "q10_serve_retrieve" -> ((s, dir) =>
       Serving.retrieveSimilarItems(
           storePairs(s, dir, col("item") === ProbeItem),
-          Tables.dictionary(s, dir), ProbeItem, None)
+          Serving.itemDictionary(Tables.dictionary(s, dir)), ProbeItem, None)
         .select(col("item_b_id"), col("key"), round(col("scaled_score"), 6).as("scaled_score"))
         .orderBy(col("scaled_score").desc_nulls_last, col("item_b_id"))
         .limit(10)),

@@ -4271,7 +4271,7 @@ object TextQueries extends QueryPack {
     },
 
     "q196_blocklist" -> {
-      val inList = BlockWords.map(_.toLowerCase).distinct.sorted
+      val inList = BlockWords.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.sorted
         .map(w => s"'$w'").mkString(", ")
       s"""WITH $ToksCte,
          |lt AS (SELECT doc_id, list_transform(tk, t -> lower(t)) AS lt FROM toks)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
 import java.util.zip.GZIPInputStream
 
 /**
@@ -176,7 +177,7 @@ object Warc {
     if (lines.isEmpty || lines(0) != "WARC/1.0") return None
     val headers = lines.drop(1).flatMap { l =>
       val i = l.indexOf(':')
-      if (i < 0) None else Some(l.substring(0, i).trim.toLowerCase -> l.substring(i + 1).trim)
+      if (i < 0) None else Some(l.substring(0, i).trim.toLowerCase(Locale.ROOT) -> l.substring(i + 1).trim)
     }.toMap
     val len = headers.get("content-length").flatMap(s => s.toLongOption)
     len match {

@@ -1,6 +1,9 @@
 package graft.store
 
+import java.util.Locale
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,27 +12,53 @@ import org.apache.spark.sql.functions._
  *
  * Each read is a declarative plan Catalyst compiles to the index-like shape
  * the reference gets from SQLite: partition/row-group pruning for the point
- * lookup, broadcast hash join for the small dictionary, and
- * TakeOrderedAndProject for ORDER BY … LIMIT (true distributed top-k —
- * never a full sort).
+ * lookup and TakeOrderedAndProject for ORDER BY … LIMIT (true distributed
+ * top-k — never a full sort). The point lookup attaches keys from an
+ * [[ItemDictionary]] shipped to the executors once per serving handle, so a
+ * lookup is one Spark job: pruned scan → key probe → top-k, with no join,
+ * no dictionary scan and no exchange.
  */
 object Serving {
+
+  /**
+   * The item dictionary as a serving value: `correlated_items`' (id, key)
+   * rows collected once on the driver and held in a broadcast variable,
+   * so every lookup that uses it probes a map instead of re-scanning and
+   * re-broadcasting the dictionary. Keys are kept as a list per id so the
+   * probe has the inner join's semantics: an id absent from the dictionary
+   * drops its neighbor rows, a NULL key is kept, a duplicated id repeats
+   * them. Catalog-sized, like the broadcast side of the join it replaces;
+   * the broadcast is released when the value is garbage-collected.
+   */
+  final class ItemDictionary private[Serving] (private[Serving] val keysOf: UserDefinedFunction)
+
+  /** Collect `correlatedItems`' (id, key) rows into an [[ItemDictionary]]
+    * (one Spark job). NULL ids are dropped: they never equal a neighbor. */
+  def itemDictionary(correlatedItems: DataFrame): ItemDictionary = {
+    val rows = correlatedItems.where(col("id").isNotNull)
+      .select(col("id").cast("long"), col("key").cast("string")).collect()
+    val keys = correlatedItems.sparkSession.sparkContext.broadcast(
+      rows.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) })
+    val none = Array.empty[String]
+    new ItemDictionary(udf((id: Long) => keys.value.getOrElse(id, none)))
+  }
 
   /**
    * EP-3 `retrieve_similar_items` (`data.py:217-250`): neighbors of one
    * item with names attached, best first.
    * SQL shape: `SELECT si.item_b_id, ci.key, si.scaled_score FROM
    * similar_items si JOIN correlated_items ci ON si.item_b_id = ci.id
-   * WHERE si.item_a_id = ? ORDER BY scaled_score DESC [LIMIT n]`.
+   * WHERE si.item_a_id = ? ORDER BY scaled_score DESC [LIMIT n]`, with the
+   * join answered by `dictionary` (same rows, same schema).
    */
-  def retrieveSimilarItems(similarItems: DataFrame, correlatedItems: DataFrame,
+  def retrieveSimilarItems(similarItems: DataFrame, dictionary: ItemDictionary,
                            itemId: Long, limit: Option[Int] = None): DataFrame = {
-    val joined = similarItems
+    val named = similarItems
       .where(col("item_a_id") === lit(itemId)) // OP-14: pruned point lookup
-      .join(broadcast(correlatedItems), col("item_b_id") === col("id")) // OP-16
-      .select(col("item_b_id"), col("key"), col("scaled_score"))
+      .select(col("item_b_id"), // OP-16: one output row per dictionary key
+        explode(dictionary.keysOf(col("item_b_id"))).as("key"), col("scaled_score"))
       .orderBy(col("scaled_score").desc, col("item_b_id").asc) // OP-24
-    limit.map(joined.limit).getOrElse(joined) // OP-26
+    limit.map(named.limit).getOrElse(named) // OP-26
   }
 
   /** `get_item_info` (`data.py:253-278`): dictionary rows for an id set
@@ -47,7 +76,7 @@ object Serving {
    */
   def searchItemsByName(correlatedItems: DataFrame, term: String,
                         limit: Int = 10): DataFrame = {
-    val t = lit(term.toLowerCase)
+    val t = lit(term.toLowerCase(Locale.ROOT))
     correlatedItems
       .where(lower(col("key")).contains(t) ||
         lower(coalesce(col("human_label"), lit(""))).contains(t))

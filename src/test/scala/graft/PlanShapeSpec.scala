@@ -23,15 +23,21 @@ class PlanShapeSpec extends SparkSpec {
     p should include("WindowGroupLimit")
   }
 
-  test("serving point lookup broadcasts the dictionary and plans top-k for the limit") {
-    val sim = Seq((1L, 2L, 0.9), (1L, 3L, 0.8)).toDF("item_a_id", "item_b_id", "scaled_score")
-    val dict = Seq((2L, "a", null: String), (3L, "b", null: String))
-      .toDF("id", "key", "human_label")
+  test("serving point lookup is one pushed-down scan and a top-k, with no exchange") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lookup").toString
+    Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 3L, 0.7))
+      .toDF("item_a_id", "item_b_id", "scaled_score").write.mode("overwrite").parquet(dir)
+    val dict = Serving.itemDictionary(Seq((2L, "a", null: String), (3L, "b", null: String))
+      .toDF("id", "key", "human_label"))
     // limit must be below the fixture's row count or EliminateLimits
     // removes it from the logical plan entirely
-    val p = planOf(Serving.retrieveSimilarItems(sim, dict, 1L, Some(1)))
-    p should include("BroadcastHashJoin")
+    val p = planOf(Serving.retrieveSimilarItems(spark.read.parquet(dir), dict, 1L, Some(1)))
+    p should include("FileScan parquet")
+    "Scan".r.findAllIn(p).length shouldBe 1
+    "PushedFilters: \\[[^\\]]*EqualTo\\(item_a_id,1\\)".r.findFirstIn(p) should not be empty
     p should include("TakeOrderedAndProject")
+    p should not include "BroadcastExchange"
+    p should not include "Exchange"
   }
 
   test("parquet point-lookup filter reaches the scan (PushedFilters)") {

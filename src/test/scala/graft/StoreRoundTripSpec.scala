@@ -2,8 +2,12 @@ package graft
 
 import graft.api.SimilarityModel
 import graft.core.Crosstab
+import graft.store.SimilarityStore
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalatest.prop.TableDrivenPropertyChecks._
 import java.nio.file.Files
+import java.util.Locale
 
 /** End-to-end EP-1 → EP-2 → EP-3: train on an occurrence log, persist the
   * store, serve lookups from the persisted parquet (SURVEY §5.2.1). */
@@ -41,6 +45,82 @@ class StoreRoundTripSpec extends SparkSpec {
     val st = store.stats.collect()(0)
     st.getAs[Long]("correlated_items") shouldBe 6L
     st.getAs[Long]("similar_items") shouldBe expected.size.toLong
+  }
+
+  /** The dictionary-join formulation `retrieve` replaced, kept as the
+    * reference its dictionary probe must agree with. */
+  private def joinRetrieve(sim: DataFrame, dict: DataFrame, itemId: Long,
+                           limit: Option[Int]): DataFrame = {
+    val joined = sim.where(col("item_a_id") === lit(itemId))
+      .join(broadcast(dict), col("item_b_id") === col("id"))
+      .select(col("item_b_id"), col("key"), col("scaled_score"))
+      .orderBy(col("scaled_score").desc, col("item_b_id").asc)
+    limit.map(joined.limit).getOrElse(joined)
+  }
+
+  test("retrieve keeps the inner-join contract of the dictionary join") {
+    val dir = Files.createTempDirectory("graft-retrieve").toString
+    SimilarityStore.writeSimilarItems(Seq(
+      (1L, 2L, 0.9), (1L, 5L, 0.7), (1L, 7L, 0.6), (1L, 3L, 0.5), (1L, 4L, 0.5),
+      (1L, 6L, 0.3), (1L, 8L, 0.1),
+      (2L, 3L, 0.8), (2L, 1L, 0.8),
+      (9L, 5L, 1.0)).toDF("item_a_id", "item_b_id", "scaled_score"), dir)
+    // id 5 is missing, id 6 has a NULL key, id 7 is listed twice, and a
+    // NULL id matches nothing
+    SimilarityStore.writeCorrelatedItems(Seq[(java.lang.Long, String)](
+      (1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (6L, null), (7L, "g1"), (7L, "g2"),
+      (8L, "h"), (null, "orphan")).toDF("id", "key"), dir)
+    val store = SimilarityModel.Store(spark, dir)
+    val sim = SimilarityStore.readSimilarItems(spark, dir)
+    val dict = SimilarityStore.readCorrelatedItems(spark, dir)
+    val rowOrder = Ordering.by((r: Row) => (r.getLong(0), Option(r.getString(1)), r.getDouble(2)))
+
+    val cases = Table(("case", "item", "limit", "item_b_ids in served order"),
+      ("absent item id", 42L, None, Nil),
+      ("absent item id, limited", 42L, Some(1), Nil),
+      ("only neighbor missing from the dictionary", 9L, None, Nil),
+      ("missing neighbor dropped, NULL key kept, duplicate repeated", 1L, None,
+        Seq(2L, 7L, 7L, 3L, 4L, 6L, 8L)),
+      ("limit 1", 1L, Some(1), Seq(2L)),
+      ("limit cuts a score tie by item_b_id", 1L, Some(4), Seq(2L, 7L, 7L, 3L)),
+      ("limit above the row count", 1L, Some(10), Seq(2L, 7L, 7L, 3L, 4L, 6L, 8L)),
+      ("tied scores order by item_b_id", 2L, None, Seq(1L, 3L)),
+      ("tied scores, limit 1", 2L, Some(1), Seq(1L)),
+      ("tied scores, limit 10", 2L, Some(10), Seq(1L, 3L)))
+
+    forAll(cases) { (what, item, limit, ids) =>
+      withClue(s"$what: ") {
+        val served = store.retrieve(item, limit)
+        val reference = joinRetrieve(sim, dict, item, limit)
+        served.schema shouldBe reference.schema
+        val rows = served.collect().toSeq
+        rows.map(_.getLong(0)) shouldBe ids
+        rows.sorted(rowOrder) shouldBe reference.collect().toSeq.sorted(rowOrder)
+      }
+    }
+    store.retrieve(1L).collect().map(r => (r.getLong(0), r.getString(1)))
+      .filter(_._1 >= 6L).sortBy(r => (r._1, Option(r._2))).toSeq shouldBe
+      Seq((6L, null), (7L, "g1"), (7L, "g2"), (8L, "h"))
+  }
+
+  test("search and the blocklist fold case the same under a Turkish locale") {
+    val dir = Files.createTempDirectory("graft-locale").toString
+    SimilarityStore.writeCorrelatedItems(
+      (1L to 3L).map(i => (i, s"item-$i")).toDF("id", "key"), dir)
+    val store = SimilarityModel.Store(spark, dir)
+    val docs = Seq((1L, "an item here"), (2L, "nothing")).toDF("doc_id", "text")
+    def flagged(word: String) =
+      graft.operators.Blocklist.flags(docs, "text", Seq("doc_id"), Seq(word))
+        .where(col("flagged")).collect().map(_.getLong(0)).toSeq
+    val saved = Locale.getDefault
+    try {
+      Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+      val upper = store.search("ITEM").collect().map(_.getLong(0)).toSeq
+      upper shouldBe Seq(1L, 2L, 3L)
+      upper shouldBe store.search("item").collect().map(_.getLong(0)).toSeq
+      flagged("ITEM") shouldBe Seq(1L)
+      flagged("ITEM") shouldBe flagged("item")
+    } finally Locale.setDefault(saved)
   }
 
   test("JDBC store face: DDL + unique indexes + bulk append round-trip on embedded Derby") {
