@@ -1,10 +1,14 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev probe: run one SparkEntry query with a stage listener and print
   * the top stages by executor run time — the "which operator is the
-  * wall" decomposition when the UI is disabled.
+  * wall" decomposition when the UI is disabled — and the profiled rep's
+  * generated-code compilations (Spark's codegen-cache misses) with the
+  * time Janino spent on them.
   *
   * usage: run-graft.sh graft.tools.QueryProbe <queryName>
   *   env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as usual. */
@@ -59,12 +63,17 @@ object QueryProbe {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       stages.clear()
     }
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     val df = fn(spark, sfDir)
     val tCons = (System.nanoTime() - t0) / 1e9
     df.write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"[probe] construction=$tCons%.1f s, action=${wall - tCons}%.1f s")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+    println(f"[probe] codegen compilations=$compiled, compile=$compileMs%.1f ms")
     import scala.jdk.CollectionConverters._
     val st = stages.asScala.toSeq
     println(f"[probe] $name wall=$wall%.1f s, stages=${st.size}, totalTaskSec=${st.map(_.ms).sum / 1e3}%.1f")

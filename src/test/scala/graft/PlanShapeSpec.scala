@@ -1,8 +1,9 @@
 package graft
 
+import graft.api.SimilarityModel
 import graft.core.{Correlation, Crosstab, Neighbors}
-import graft.store.Serving
-import org.apache.spark.sql.DataFrame
+import graft.store.{Serving, SimilarityStore}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape guards: the perf-critical plan properties verified
@@ -38,6 +39,32 @@ class PlanShapeSpec extends SparkSpec {
     p should include("TakeOrderedAndProject")
     p should not include "BroadcastExchange"
     p should not include "Exchange"
+  }
+
+  test("after a handle's first lookup, a lookup with another id compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-lookup-codegen").toString
+    SimilarityStore.writeSimilarItems(Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 3L, 0.7),
+      (2L, 1L, 0.6), (3L, 1L, 0.5)).toDF("item_a_id", "item_b_id", "scaled_score"), dir)
+    SimilarityStore.writeCorrelatedItems(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "key"), dir)
+    val store = SimilarityModel.Store(spark, dir)
+    // the reference reads local copies, which no file-scan rule rewrites
+    def local(df: DataFrame) = spark.createDataFrame(df.collectAsList(), df.schema)
+    val sim = local(SimilarityStore.readSimilarItems(spark, dir))
+    val dict = local(SimilarityStore.readCorrelatedItems(spark, dir))
+    val rowOrder = Ordering.by((r: Row) => (r.getLong(0), Option(r.getString(1)), r.getDouble(2)))
+    store.retrieve(1L, Some(10)).collect() // warm-up: compiles the lookup's classes
+    for (id <- Seq(2L, 3L, 42L)) withClue(s"item $id: ") {
+      val lookup = store.retrieve(id, Some(10))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val rows = lookup.collect().toSeq
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled shouldBe 0L
+      s"PushedFilters: \\[[^\\]]*EqualTo\\(item_a_id,$id\\)".r
+        .findFirstIn(planOf(lookup)) should not be empty
+      rows.sorted(rowOrder) shouldBe StoreRoundTripSpec.joinRetrieve(sim, dict, id, Some(10))
+        .collect().toSeq.sorted(rowOrder)
+    }
   }
 
   test("parquet point-lookup filter reaches the scan (PushedFilters)") {

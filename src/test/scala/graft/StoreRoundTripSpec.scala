@@ -9,10 +9,24 @@ import org.scalatest.prop.TableDrivenPropertyChecks._
 import java.nio.file.Files
 import java.util.Locale
 
+object StoreRoundTripSpec {
+  /** The dictionary-join formulation `retrieve` replaced, kept as the
+    * reference its dictionary probe must agree with. */
+  def joinRetrieve(sim: DataFrame, dict: DataFrame, itemId: Long,
+                   limit: Option[Int]): DataFrame = {
+    val joined = sim.where(col("item_a_id") === lit(itemId))
+      .join(broadcast(dict), col("item_b_id") === col("id"))
+      .select(col("item_b_id"), col("key"), col("scaled_score"))
+      .orderBy(col("scaled_score").desc, col("item_b_id").asc)
+    limit.map(joined.limit).getOrElse(joined)
+  }
+}
+
 /** End-to-end EP-1 → EP-2 → EP-3: train on an occurrence log, persist the
   * store, serve lookups from the persisted parquet (SURVEY §5.2.1). */
 class StoreRoundTripSpec extends SparkSpec {
   import spark.implicits._
+  import StoreRoundTripSpec.joinRetrieve
 
   test("fit → storeIn → retrieve round-trip preserves thresholded neighbors") {
     val dir = Files.createTempDirectory("graft-store").toString
@@ -45,17 +59,6 @@ class StoreRoundTripSpec extends SparkSpec {
     val st = store.stats.collect()(0)
     st.getAs[Long]("correlated_items") shouldBe 6L
     st.getAs[Long]("similar_items") shouldBe expected.size.toLong
-  }
-
-  /** The dictionary-join formulation `retrieve` replaced, kept as the
-    * reference its dictionary probe must agree with. */
-  private def joinRetrieve(sim: DataFrame, dict: DataFrame, itemId: Long,
-                           limit: Option[Int]): DataFrame = {
-    val joined = sim.where(col("item_a_id") === lit(itemId))
-      .join(broadcast(dict), col("item_b_id") === col("id"))
-      .select(col("item_b_id"), col("key"), col("scaled_score"))
-      .orderBy(col("scaled_score").desc, col("item_b_id").asc)
-    limit.map(joined.limit).getOrElse(joined)
   }
 
   test("retrieve keeps the inner-join contract of the dictionary join") {
