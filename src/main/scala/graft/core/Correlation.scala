@@ -226,42 +226,4 @@ object Correlation {
         corrExpr(col("n"), col("sxy"), col("sx_a"), col("sxx_a"),
                  col("sx_b"), col("sxx_b")).as("corr")))
   }
-
-  /**
-   * Strategy C (SURVEY §7.2): MLlib distributed-matrix path, mirroring the
-   * reference's dense computation (`similarity.py:34-43`) — rows are
-   * contexts, columns are items, `Statistics.corr` produces the dense
-   * item×item Pearson matrix on the driver. DEV/VALIDATION ONLY: the I×I
-   * result densifies on the driver, so it caps at ~20k items; the
-   * relational paths above are the production route. Items are
-   * dictionary-encoded to column positions (no dense-1-based-id
-   * assumption, SURVEY §7.4.6); output is the long pair form with the
-   * same (item_a, item_b, corr) schema, self excluded, NaN → NULL.
-   */
-  def densePairs(crosstab: DataFrame): DataFrame = {
-    import org.apache.spark.mllib.linalg.Vectors
-    import org.apache.spark.mllib.stat.Statistics
-    val spark = crosstab.sparkSession
-    import spark.implicits._
-    val items = crosstab.select("item").distinct().orderBy("item").as[Long].collect()
-    val posB = spark.sparkContext.broadcast(items.zipWithIndex.toMap)
-    val nItems = items.length
-    val rows = crosstab
-      .select(col("ctx"), col("item"), col("cnt").cast("double"))
-      .as[(Long, Long, Double)].rdd
-      .groupBy(_._1)
-      .map { case (_, cells) =>
-        Vectors.sparse(nItems,
-          cells.map { case (_, item, cnt) => (posB.value(item), cnt) }.toSeq)
-      }
-    val m = Statistics.corr(rows, "pearson")
-    val pairs = for {
-      ia <- items.indices
-      ib <- items.indices
-      if ia != ib
-    } yield (items(ia), items(ib),
-      (if (m(ia, ib).isNaN) null
-       else java.lang.Double.valueOf(m(ia, ib))): java.lang.Double)
-    pairs.toDF("item_a", "item_b", "corr")
-  }
 }

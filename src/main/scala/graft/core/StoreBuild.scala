@@ -52,35 +52,19 @@ import org.apache.spark.sql.functions._
  */
 object StoreBuild {
 
-  /** Catalog size above which the build switches to the distributed-rank /
-    * shuffled-join plan (see `scaledNeighbors`). Below it, the per-item
-    * stats table is broadcast anyway, so the single-partition sort is
-    * already in the right cost class AND canonical-plan caching keeps
-    * repeated builds cheap. 10⁷ items ≈ a few hundred MB of stats rows —
-    * the edge of comfortable broadcast/sort-on-one-core territory. */
-  val LargeCatalogThreshold: Long = 10L * 1000 * 1000
-
   /**
    * All-items store table: (item_a_id, item_b_id, scaled_score).
    *
-   * `largeCatalog`: None (default) probes the non-degenerate item count
-   * (one cheap count over the cached stats table — it materializes
-   * exactly what every downstream branch consumes anyway) and switches
-   * plans at `LargeCatalogThreshold`; Some(x) forces the choice. The two
-   * plans are output-identical (spec-checked); they differ only in how
-   * the CATALOG-sized structures are handled:
-   *
-   *  - small: global u-rank via one single-partition window over the
-   *    per-item stats table, stats broadcast into every join;
-   *  - large: two-phase distributed rank (range-partition by (u desc,
-   *    item), per-partition row_number, join-based partition offsets —
-   *    no single-partition stage anywhere, plan-shape-guarded) and
-   *    shuffled stats joins instead of broadcasts.
+   * One plan for every catalog. Its catalog-sized work is the per-item
+   * stats table (item, sx, sxx, u — about 24 B/item): it is broadcast
+   * into every join, and the global u-rank is one unpartitioned
+   * row_number window over it, i.e. one single-partition sort. That is
+   * the ceiling: no catalog above about 2 M items (local `ScaleData`
+   * sf10) has been run through this build.
    */
   def scaledNeighbors(crosstab0: DataFrame, k: Double = 2.0,
-                      largeCatalog: Option[Boolean] = None,
                       itemPredicate: Option[Column] = None): DataFrame =
-    fromCrosstab(crosstab0, k, largeCatalog, itemPredicate, None).neighbors
+    fromCrosstab(crosstab0, k, itemPredicate).neighbors
 
   /** All-items store build from a SUFFICIENT-STATISTICS snapshot
     * (`Incremental.Stats`) — the incremental-ingest composition: after a
@@ -97,14 +81,14 @@ object StoreBuild {
     * (counterexample spec-gated in StoreBuildSpec). The delta-BOUNDED
     * production pattern is `touched`-selection refresh + stored rows
     * for the rest (bounded staleness, q177): pass `touched` to rebuild
-    * only those item_a rows at |touched|×avg-degree emission cost (the
-    * catalog-wide per-item stats table — 24 B/item — is still consulted,
-    * as the closed form requires). */
+    * only those item_a rows at |touched|×avg-degree emission cost. The
+    * catalog-wide per-item stats table (24 B/item) is still broadcast and
+    * sorted once on one partition for the u-rank, as the closed form
+    * requires — the same ceiling as `scaledNeighbors`. */
   def scaledNeighborsFromStats(stats: Incremental.Stats, k: Double = 2.0,
-                               largeCatalog: Option[Boolean] = None,
                                touched: Option[DataFrame] = None): DataFrame =
     new Build(pinPlan(stats.items), pinPlan(stats.co), pinPlan(stats.n),
-      k, largeCatalog, None, touched).neighbors
+      k, None, touched).neighbors
 
   /** Cache a folded summary AND seal its lineage behind a leaf scan.
     *
@@ -132,18 +116,15 @@ object StoreBuild {
     * moments, matching the windowed pipeline's aggregate-over-all-NULLs.
     * Output: (item_a, mean_corr, std_corr). */
   def vectorMoments(crosstab0: DataFrame,
-                    itemPredicate: Option[Column] = None,
-                    largeCatalog: Option[Boolean] = None): DataFrame =
-    fromCrosstab(crosstab0, 2.0, largeCatalog, itemPredicate, None).moments
+                    itemPredicate: Option[Column] = None): DataFrame =
+    fromCrosstab(crosstab0, 2.0, itemPredicate).moments
 
   private def fromCrosstab(crosstab0: DataFrame, k: Double,
-                           largeCatalog: Option[Boolean],
-                           itemPredicate: Option[Column],
-                           itemSet: Option[DataFrame]): Build = {
+                           itemPredicate: Option[Column]): Build = {
     val ct = Caches.cacheOnce(crosstab0)
     new Build(Correlation.itemStats(ct),
       Caches.cacheOnce(Correlation.sparseCoMoments(ct)),
-      Correlation.nContexts(ct), k, largeCatalog, itemPredicate, itemSet)
+      Correlation.nContexts(ct), k, itemPredicate)
   }
 
   /** The shared build: per-item stats (item, sx, sxx), upper-triangle
@@ -162,12 +143,9 @@ object StoreBuild {
     * Partner stats, globals (ΣU/ΣV/|D|), and the zero-partner u-ranking
     * remain catalog-wide: they are what the closed form needs to stand in
     * for the absent dense vectors. */
-  private final class Build(itemSt: DataFrame, co0: DataFrame, n0: DataFrame,
-                            k: Double, largeCatalog: Option[Boolean],
-                            itemPredicate: Option[Column],
+  private final class Build(itemSt: DataFrame, co: DataFrame, n: DataFrame,
+                            k: Double, itemPredicate: Option[Column],
                             itemSet: Option[DataFrame] = None) {
-    val n1 = n0 // 1 row
-
     // item_a-side restriction, Column- or set-valued: the set form
     // (single-column `item` frame) is the delta-refresh face — a
     // LEFT SEMI join keyed on item, so the selection never needs to
@@ -181,7 +159,7 @@ object StoreBuild {
 
     // Per-item stats with den/u; D = non-degenerate items (den > 0).
     val d = Caches.cacheOnce(
-      itemSt.crossJoin(broadcast(n1))
+      itemSt.crossJoin(broadcast(n))
         .withColumn("den", sqrt(col("n") * col("sxx") - col("sx") * col("sx")))
         .where(col("den") > 0.0)
         .withColumn("u", col("sx") / col("den")))
@@ -194,15 +172,6 @@ object StoreBuild {
     val globals = broadcast(d.agg(
       sum(col("u")).as("gU"), sum(col("u") * col("u")).as("gV"),
       count(lit(1)).as("cntD"), min(col("u")).as("uming")))
-
-    // Catalog-size gate: the count runs over the CACHED stats table that
-    // every downstream branch reads anyway, so the probe costs one cheap
-    // job, not a recompute.
-    val large = largeCatalog.getOrElse(d.count() > LargeCatalogThreshold)
-    // Under the large-catalog plan, catalog-sized tables join SHUFFLED
-    // instead of broadcast (1-row globals and the ~empty zero-pair
-    // candidate set stay broadcast at any scale).
-    def bcCat(df: DataFrame): DataFrame = if (large) df else broadcast(df)
 
     def corrCol(sxy: Column): Column = {
       val den = sqrt(col("n") * col("sxx_a") - col("sx_a") * col("sx_a")) *
@@ -221,7 +190,6 @@ object StoreBuild {
     // table that every consumer can rebuild its view from with
     // broadcast-only work. The symmetric closure and stat joins are
     // recomputed per consumer: map-side, no shuffle.
-    val co = co0
     val sym = co.unionByName(
       co.select(col("item_b").as("item_a"), col("item_a").as("item_b"), col("sxy")))
     // The symmetric closure restricted to selected item_a (semi-join on the
@@ -232,7 +200,7 @@ object StoreBuild {
     // co-occurrence ledger either way.
     val symA =
       if (!restricted) sym
-      else sym.join(bcCat(dSel.select(col("item").as("item_a"))), Seq("item_a"), "left_semi")
+      else sym.join(broadcast(dSel.select(col("item").as("item_a"))), Seq("item_a"), "left_semi")
     // CACHED: the correlation pipeline feeds BOTH the fused stats shuffle
     // and the sparse-emission branch; as a `def` the symmetric closure +
     // two stat joins + corr arithmetic ran once per consumer (the probe
@@ -240,54 +208,26 @@ object StoreBuild {
     // ~2× the crosstab path's final-stage task time). The table is
     // (item_a, item_b, u_b, corr) — the same size class as the co-moment
     // cache it derives from.
-    val sp = Caches.cacheOnce(symA.join(bcCat(da), Seq("item_a"))
-      .join(bcCat(db), Seq("item_b"))
-      .crossJoin(broadcast(n1))
+    val sp = Caches.cacheOnce(symA.join(broadcast(da), Seq("item_a"))
+      .join(broadcast(db), Seq("item_b"))
+      .crossJoin(broadcast(n))
       .select(col("item_a"), col("item_b"), col("u_b"),
         corrCol(col("sxy")).as("corr")))
 
     // Global u-ranking of D. r is descending in u; the ascending rank of
     // the same row is cntD+1−r, so ONE ranking serves both extrema.
-    //
-    // Small catalogs: one unpartitioned row_number window — a DELIBERATE
-    // single-partition sort of the per-item stats table, the same table
-    // the plan broadcasts anyway, so its size class is already bounded by
-    // driver/executor memory and the sort is a negligible fraction of the
-    // build. (The tempting orderBy + rdd.zipWithIndex produces an
-    // RDD-backed plan with a fresh identity per call, which defeats
-    // canonical-plan cache reuse across queries — measured 2× SLOWER
-    // end-to-end.)
-    //
-    // Large catalogs: two-phase distributed rank. Range-partition by the
-    // rank order, number rows per partition, then add each partition's
-    // global offset (a join-based prefix sum over the ≤ shuffle-partition
-    // count of per-partition totals — deliberately NOT a window, so no
-    // single-partition stage exists anywhere in this plan). Correct for
-    // ANY contiguous-range placement, so it does not depend on the range
-    // sampler's exact bounds.
-    val rkBase = {
-      val du = d.select(col("item"), col("u"))
-      if (!large)
-        du.withColumn("r",
-          row_number().over(Window.orderBy(col("u").desc, col("item").asc)).cast("long"))
-      else {
-        // Cached: feeds both the local numbering and the per-partition
-        // counts; without it each consumer re-runs the range exchange.
-        val parts = Caches.cacheOnce(
-          du.repartitionByRange(col("u").desc, col("item").asc)
-            .withColumn("pid", spark_partition_id()))
-        val wLocal = Window.partitionBy(col("pid")).orderBy(col("u").desc, col("item").asc)
-        val local = parts.withColumn("lr", row_number().over(wLocal).cast("long"))
-        val counts = parts.groupBy(col("pid")).agg(count(lit(1)).as("pcnt"))
-        val offs = counts.select(col("pid"), col("pcnt"))
-          .join(broadcast(counts.select(col("pid").as("qid"), col("pcnt").as("qcnt"))),
-            col("qid") < col("pid"), "left")
-          .groupBy(col("pid")).agg(coalesce(sum(col("qcnt")), lit(0L)).as("off"))
-        local.join(broadcast(offs), Seq("pid"))
-          .select(col("item"), col("u"), (col("lr") + col("off")).as("r"))
-      }
-    }
-    val rk = bcCat(rkBase)
+    // One unpartitioned row_number window: a DELIBERATE single-partition
+    // sort of the per-item stats table, the same table the plan broadcasts
+    // anyway, so its size class is already bounded by driver/executor
+    // memory and the sort is a negligible fraction of the build. (The
+    // tempting orderBy + rdd.zipWithIndex produces an RDD-backed plan with
+    // a fresh identity per call, which defeats canonical-plan cache reuse
+    // across queries — measured 2× SLOWER end-to-end. The distributed
+    // `Ids.denseIds` rank was slower and used more memory on the store
+    // benchmark's workloads.)
+    val rk = broadcast(d.select(col("item"), col("u"))
+      .withColumn("r",
+        row_number().over(Window.orderBy(col("u").desc, col("item").asc)).cast("long")))
 
     // ONE shuffle on item_a computes every per-item statistic: the sparse
     // moment aggregates (NULL-corr rows — degenerate partners and the
@@ -378,17 +318,20 @@ object StoreBuild {
     /** Closed-form OP-20 moments (see `vectorMoments`). Non-degenerate
       * items read off the cached perItem table; degenerate selected items
       * (dropped from D) are restored with NULL moments — the windowed
-      * pipeline aggregates their all-NULL vectors to NULL, not absence. */
+      * pipeline aggregates their all-NULL vectors to NULL, not absence.
+      * A one-item catalog has no partner, hence no vector and no row. */
     def moments: DataFrame = {
-      val degenerate = itemSt.crossJoin(broadcast(n1))
+      val degenerate = itemSt.crossJoin(broadcast(n))
         .where(col("n") * col("sxx") - col("sx") * col("sx") <= 0.0)
       val degSel = restrictItems(degenerate)
         .select(col("item").as("item_a"),
           lit(null).cast("double").as("mean_corr"),
           lit(null).cast("double").as("std_corr"))
+      val partnered = itemSt.agg((count(lit(1)) > 1).as("partnered"))
       perItem.select(col("item_a"), col("mean").as("mean_corr"),
           col("sigma").as("std_corr"))
         .unionByName(degSel)
+        .crossJoin(broadcast(partnered)).where(col("partnered")).drop("partnered")
     }
 
     def scaledScore: Column =
@@ -405,7 +348,7 @@ object StoreBuild {
     def neighbors: DataFrame = {
       // (a) Sparse emissions: per-row scaled score vs per-item threshold.
       val sparseOut = sp
-        .join(bcCat(perItem.drop("sx_a", "sxx_a", "u_a", "n", "uming",
+        .join(broadcast(perItem.drop("sx_a", "sxx_a", "u_a", "n", "uming",
           "mean", "sigma")), Seq("item_a"))
         .where(passes)
         .select(col("item_a").as("item_a_id"), col("item_b").as("item_b_id"),

@@ -12,9 +12,9 @@ import graft.core.Caches
  * The naive forms both break at 100 TB: `row_number()` over an
  * unpartitioned window funnels the corpus through one sort task, and
  * `monotonically_increasing_id()` is neither dense nor stable across
- * re-runs. This is the two-phase distributed rank (the same shape as the
- * `StoreBuild` large-catalog rank): range-partition by the order, number
- * rows locally per partition, then add each partition's global offset —
+ * re-runs. This is the two-phase distributed rank: range-partition by
+ * the order, number rows locally per partition, then add each
+ * partition's global offset —
  * a broadcast prefix sum over at most `spark.sql.shuffle.partitions`
  * per-partition totals. Correct for ANY contiguous-range placement, so
  * it does not depend on the range sampler's exact bounds; deterministic

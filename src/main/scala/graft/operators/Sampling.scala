@@ -142,10 +142,9 @@ object Sampling {
   }
 
   /** Input size past which per-stratum running sums switch to the
-    * two-phase distributed form (the `StoreBuild.LargeCatalogThreshold`
-    * discipline): below it a single sort task per stratum is cheaper
-    * than the extra aggregate + broadcast join; above it one stratum can
-    * be half the corpus — at 100 TB a per-stratum window is a ~10⁹-row
+    * two-phase distributed form: below it a single sort task per stratum
+    * is cheaper than the extra aggregate + broadcast join; above it one
+    * stratum can be half the corpus — at 100 TB a per-stratum window is a ~10⁹-row
     * single-task sort, the exact shape `Ids.denseIds`' two-phase rank
     * exists to avoid. */
   val TwoPhaseThreshold: Long = 10L * 1000 * 1000

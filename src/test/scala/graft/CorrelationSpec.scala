@@ -94,19 +94,6 @@ class CorrelationSpec extends SparkSpec {
       assert(approx(v, m(ia, ib), 1e-8), s"corr($a,$b): $v vs mllib ${m(ia, ib)}"))
   }
 
-  test("densePairs (strategy C, MLlib matrix path) agrees with fullPairs on every pair") {
-    val dense = pairMap(Correlation.densePairs(ct))
-    for (item <- Seq(1L, 2L, 3L)) {
-      val full = pairMap(Correlation.fullPairs(ct, col("item") === item))
-      for (((a, b), c) <- full) {
-        (c, dense((a, b))) match {
-          case (Some(x), Some(y)) => assert(approx(x, y, 1e-8), s"corr($a,$b): $x vs $y")
-          case (g, w) => assert(g == w, s"corr($a,$b): $g vs $w")
-        }
-      }
-    }
-  }
-
   test("saltedCoMoments equals sparseCoMoments pair-for-pair (skew-resistant join)") {
     val rnd = new scala.util.Random(13)
     // one deliberately hot context (id 99) shared by every item

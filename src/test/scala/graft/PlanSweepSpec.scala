@@ -20,9 +20,8 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
  *    over raw rows funnels the corpus through one task.
  *
  * Exemptions are EXPLICIT, per query, each with the documented gate that
- * bounds it (the `StoreBuild` small-catalog rank window — large catalogs
- * take the two-phase distributed rank with no single-partition stage,
- * spec-gated in `StoreBuildSpec`).
+ * bounds it (the `StoreBuild` u-rank window over the per-item stats
+ * table, which the same plan broadcasts).
  *
  * AQE is disabled for the sweep so the prepared physical tree (with its
  * exchanges materialized) is walkable; the adaptive runtime only ever
@@ -35,25 +34,23 @@ class PlanSweepSpec extends SparkSpec {
 
   /** query → the documented construct that explains its flagged shapes AT
     * THIS FIXTURE SCALE. Every exempted query routes through the
-    * `StoreBuild` closed-form build, whose SMALL-CATALOG path is a
-    * deliberate unpartitioned row_number (plus the single-partition
-    * exchange feeding it) over the per-item stats table — a table the
-    * same plan broadcasts, so its size class is already bounded; LARGE
-    * catalogs take the two-phase distributed rank with no single-
-    * partition stage anywhere (`StoreBuild.scala`, gated in
-    * `StoreBuildSpec`). */
+    * `StoreBuild` closed-form build, whose u-rank is a deliberate
+    * unpartitioned row_number (plus the single-partition exchange feeding
+    * it) over the per-item stats table — a table the same plan
+    * broadcasts, so its size class is already bounded (`StoreBuild.scala`
+    * states the ceiling). */
   private val exemptions: Map[String, String] = Map(
-    "q08_store_pipeline" -> "StoreBuild small-catalog rank (sampled store pipeline)",
-    "q13_db_stats" -> "StoreBuild small-catalog rank (behind the sampled store stats)",
-    "q14_moments" -> "StoreBuild small-catalog rank (vectorMoments closed form)",
-    "q38_store_all_items" -> "StoreBuild small-catalog rank (all-items build)",
+    "q08_store_pipeline" -> "StoreBuild u-rank (sampled store pipeline)",
+    "q13_db_stats" -> "StoreBuild u-rank (behind the sampled store stats)",
+    "q14_moments" -> "StoreBuild u-rank (vectorMoments closed form)",
+    "q38_store_all_items" -> "StoreBuild u-rank (all-items build)",
     // q46 routes through the same build but its RETURNED plan is the
     // parquet read-back of the written store — nothing to exempt there
-    "q57_incremental_store" -> "StoreBuild small-catalog rank (fed from the stats snapshot)",
+    "q57_incremental_store" -> "StoreBuild u-rank (fed from the stats snapshot)",
     // q177 runs the SAME build twice (base store write + touched-only
     // refresh); its untouched branch is a parquet read-back + anti-join —
     // the exempted shapes all come from the two build passes
-    "q177_store_refresh_touched" -> "StoreBuild small-catalog rank (base build + touched refresh)",
+    "q177_store_refresh_touched" -> "StoreBuild u-rank (base build + touched refresh)",
     // The histogram-cumulative family: each flagged window (and the
     // single-partition exchange feeding it) runs over an aggregate whose
     // GROUPING KEY DOMAIN is a compile-time constant — ≤ bins/tiers rows

@@ -21,13 +21,37 @@ class StoreBuildSpec extends SparkSpec {
         r.getDouble(r.fieldIndex("scaled_score"))
     }.toMap
 
-  private def check(occ: Seq[(Long, Long)], k: Double = 2.0): Unit = {
-    val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
-    val got = asMap(StoreBuild.scaledNeighbors(ct, k))
-    val want = asMap(windowed(ct, k))
+  private def sameScores(got: Map[(Long, Long), Double],
+                         want: Map[(Long, Long), Double]): Unit = {
     got.keySet shouldBe want.keySet
     got.foreach { case (key, s) =>
       assert(approx(s, want(key), 1e-9), s"$key: closed=$s windowed=${want(key)}")
+    }
+  }
+
+  private def check(occ: Seq[(Long, Long)], k: Double = 2.0): Unit = {
+    val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
+    sameScores(asMap(StoreBuild.scaledNeighbors(ct, k)), asMap(windowed(ct, k)))
+  }
+
+  /** vectorMoments must equal avg/stddev_samp over the dense fullPairs
+    * vectors: same item rows, NULL where the window path is NULL. */
+  private def checkMoments(ct: DataFrame, pred: org.apache.spark.sql.Column): Unit = {
+    def byItem(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    val got = byItem(StoreBuild.vectorMoments(ct, Some(pred)))
+    val want = byItem(Correlation.fullPairs(ct, pred)
+      .groupBy(col("item_a"))
+      .agg(avg(col("corr")).as("m"), stddev_samp(col("corr")).as("s")))
+    got.keySet shouldBe want.keySet
+    got.foreach { case (item, (m, s)) =>
+      val (wm, ws) = want(item)
+      m.isDefined shouldBe wm.isDefined
+      s.isDefined shouldBe ws.isDefined
+      m.zip(wm).foreach { case (a, b) =>
+        assert(approx(a.asInstanceOf[Double], b.asInstanceOf[Double], 1e-9), s"mean $item") }
+      s.zip(ws).foreach { case (a, b) =>
+        assert(approx(a.asInstanceOf[Double], b.asInstanceOf[Double], 1e-9), s"std $item") }
     }
   }
 
@@ -125,60 +149,20 @@ class StoreBuildSpec extends SparkSpec {
       s"item 1 untouched by the delta, yet its scores moved: $before vs $after")
   }
 
-  test("large-catalog plan is output-identical to the small plan") {
-    val rnd = new scala.util.Random(19)
-    val occ = Seq.fill(400)((rnd.nextInt(15).toLong + 1, rnd.nextInt(30).toLong + 1))
-    val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
-    val small = asMap(StoreBuild.scaledNeighbors(ct, 2.0, largeCatalog = Some(false)))
-    val large = asMap(StoreBuild.scaledNeighbors(ct, 2.0, largeCatalog = Some(true)))
-    large.keySet shouldBe small.keySet
-    large.foreach { case (key, s) =>
-      assert(approx(s, small(key), 1e-12), s"$key: large=$s small=${small(key)}")
-    }
-  }
-
-  test("large-catalog plan has NO single-partition window anywhere") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    // Descend through AQE wrappers AND cached (InMemoryRelation) subplans —
-    // cacheOnce hides the rank pipeline behind an InMemoryTableScan.
-    def unpartitionedWindows(p: SparkPlan): Seq[WindowExec] =
-      p.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
-        case a: AdaptiveSparkPlanExec => unpartitionedWindows(a.initialPlan)
-        case s: InMemoryTableScanExec => unpartitionedWindows(s.relation.cachedPlan)
-      }.flatten
-    // Plans from earlier tests are cached plan-equal; clear so this test
-    // inspects the full pipeline, not an InMemoryTableScan of it.
-    spark.catalog.clearCache()
-    val rnd = new scala.util.Random(23)
-    val occ = Seq.fill(300)((rnd.nextInt(12).toLong + 1, rnd.nextInt(20).toLong + 1))
-    val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
-    val large = StoreBuild.scaledNeighbors(ct, 2.0, largeCatalog = Some(true))
-    unpartitionedWindows(large.queryExecution.executedPlan) shouldBe empty
-    // and the small plan DOES rank through one — the gate is real
-    spark.catalog.clearCache()
-    val small = StoreBuild.scaledNeighbors(ct, 2.0, largeCatalog = Some(false))
-    unpartitionedWindows(small.queryExecution.executedPlan) should not be empty
-  }
-
   test("item predicate pushdown equals the windowed pipeline on the selection") {
     // q08/q13's shape: a modulo sample of the catalog, each selected item
     // scaled+thresholded against its COMPLETE vector. The pushdown build
     // must agree row-for-row with fullPairs(pred) → scale → threshold —
-    // including zero-co-occurrence admissions (k = -3 branch) — on both
-    // catalog plans.
+    // including zero-co-occurrence admissions (k = -3 branch).
     val rnd = new scala.util.Random(57)
     val occ = Seq.fill(400)((rnd.nextInt(20).toLong + 1, rnd.nextInt(30).toLong + 1))
     val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
     val pred = col("item") % 3 === 0
-    for (k <- Seq(2.0, -3.0); large <- Seq(Some(false), Some(true))) {
-      val got = asMap(StoreBuild.scaledNeighbors(ct, k, large, Some(pred)))
+    for (k <- Seq(2.0, -3.0)) {
+      val got = asMap(StoreBuild.scaledNeighbors(ct, k, Some(pred)))
       val want = asMap(
         Neighbors.scaledStdDevThreshold(Correlation.fullPairs(ct, pred), k))
-      withClue(s"k=$k large=$large: ") {
+      withClue(s"k=$k: ") {
         got.keySet shouldBe want.keySet
         got.foreach { case (key, s) =>
           assert(approx(s, want(key), 1e-9), s"$key: pushdown=$s windowed=${want(key)}")
@@ -195,25 +179,27 @@ class StoreBuildSpec extends SparkSpec {
     val base = Seq.fill(300)((rnd.nextInt(12).toLong + 1, rnd.nextInt(20).toLong + 1))
     val occ = base ++ base.map(_._2).distinct.map(c => (99L, c))
     val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
-    for (pred <- Seq(lit(true), col("item") % 3 === 0)) {
-      val got = StoreBuild.vectorMoments(ct, Some(pred)).collect()
-        .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
-      val want = Correlation.fullPairs(ct, pred)
-        .groupBy(col("item_a"))
-        .agg(avg(col("corr")).as("m"), stddev_samp(col("corr")).as("s"))
-        .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
-      withClue(s"pred=$pred: ") {
-        got.keySet shouldBe want.keySet
-        got.foreach { case (item, (m, s)) =>
-          val (wm, ws) = want(item)
-          m.isDefined shouldBe wm.isDefined
-          s.isDefined shouldBe ws.isDefined
-          m.zip(wm).foreach { case (a, b) =>
-            assert(approx(a.asInstanceOf[Double], b.asInstanceOf[Double], 1e-9), s"mean $item") }
-          s.zip(ws).foreach { case (a, b) =>
-            assert(approx(a.asInstanceOf[Double], b.asInstanceOf[Double], 1e-9), s"std $item") }
-        }
-      }
+    for (pred <- Seq(lit(true), col("item") % 3 === 0))
+      withClue(s"pred=$pred: ")(checkMoments(ct, pred))
+  }
+
+  test("degenerate catalogs: empty, one item, one context, all-degenerate") {
+    // Edge shapes through the one plan (the unpartitioned u-rank over an
+    // EMPTY D included), ANSI on: the crosstab build, the snapshot build
+    // and the moments must all equal the windowed pipeline and not throw.
+    val cases = Seq(
+      "empty log" -> Seq.empty[(Long, Long)],
+      "one item" -> Seq((1L, 1L), (1L, 2L), (1L, 2L)),
+      "one context" -> Seq((1L, 5L), (2L, 5L), (2L, 5L), (3L, 5L)),
+      // every item once in every context: den = 0 for all, D is empty
+      "all-degenerate" -> (for (i <- 1L to 4L; c <- 1L to 3L) yield (i, c)))
+    for ((name, occ) <- cases) withClue(s"$name: ") {
+      val ct = Crosstab.build(occ.toDF("item_id", "reference_id"))
+      val want = asMap(windowed(ct, 2.0))
+      sameScores(asMap(StoreBuild.scaledNeighbors(ct, 2.0)), want)
+      sameScores(asMap(StoreBuild.scaledNeighborsFromStats(
+        graft.core.Incremental.fromCells(ct), 2.0)), want)
+      checkMoments(ct, lit(true))
     }
   }
 
