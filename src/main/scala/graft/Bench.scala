@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-round benchmark: every SparkEntry query, `reps` interleaved rounds,
@@ -9,7 +8,6 @@ import scala.collection.mutable
   * never silently timed as a success. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    graft.core.Scratch.pinTmpdir() // before any Spark class touches the JVM temp root
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
@@ -17,22 +15,7 @@ object Bench {
     // count (the deployment rule): at sf10 the default 32 leaves ~100×
     // sf0.1 bytes per task and the wide store aggregates spill
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // bound the SQL-listener plan strings: deep cached funnels print
-      // nested InMemoryRelation subtrees multiplicatively, and an
-      // unbounded explainString can dominate driver time (or overflow
-      // the heap) on every action of a complex query
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, shuffle)
     // untimed warmup: JIT + codegen + parquet-footer caches AND the
     // shared cacheOnce subplans, one warmup per fixture family — q05 the
     // lineitem correlation shapes, q16 the documents text family, q25

@@ -1,15 +1,7 @@
 package graft
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    graft.core.Scratch.pinTmpdir()
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local("8", "8")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

@@ -1,29 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    graft.core.Scratch.pinTmpdir() // before any Spark class touches the JVM temp root
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // bound the SQL-listener plan strings: deep cached funnels print
-      // nested InMemoryRelation subtrees multiplicatively, and an
-      // unbounded explainString can dominate driver time (or overflow
-      // the heap) on every action of a complex query
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // Dev filter: SPARK_GRAFT_ONLY=q105,q106 dumps only matching queries
     // (prefix match) — the driver leaves it unset and dumps everything.

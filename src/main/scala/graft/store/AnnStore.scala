@@ -1,6 +1,5 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.SimilaritySearch
@@ -28,7 +27,7 @@ import graft.operators.SimilaritySearch
  * the corpus; serving touches only the probed buckets/lists.
  *
  * DURABILITY — every versioned table is BATCH-COMMITTED inside its
- * version directory (the `DedupStore` protocol): each write lands as a
+ * version directory (the `Compaction` protocol): each write lands as a
  * `batch_<name>` parquet directory and becomes visible only when its
  * `_committed_<name>` marker (written LAST) exists. A crash mid-append
  * leaves an uncommitted directory readers never see; a RETRY under the
@@ -51,79 +50,46 @@ object AnnStore {
   val IvfPqResCodebooks = "ivf_pqres_codebooks"
   val IvfPqResLists = "ivf_pqres_lists"
 
-  private def touch(f: FileSystem, path: String): Unit =
-    f.create(new Path(path), true).close()
-
-  private def requireName(name: String): Unit =
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
-  /** Committed batch directories under a version dir — the ONLY
-    * directories a reader may see. */
-  private def committedDirs(f: FileSystem, vdir: String): Seq[String] = {
-    val base = new Path(vdir)
-    if (!f.exists(base)) Seq.empty
-    else f.listStatus(base).toSeq
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .collect { case nm if nm.startsWith("_committed_") => nm.drop("_committed_".length) }
-      .map(nm => s"$vdir/batch_$nm")
-      .filter(d => f.exists(new Path(d)))
-  }
-
-  /** Land `rows` as the marker-committed batch `name` under `vdir`; a
-    * batch whose marker already exists is a redelivery → no-op (names are
-    * the identity of an append). */
-  private def commitBatch(rows: DataFrame, vdir: String, name: String): Unit = {
-    requireName(name)
-    val f = new Path(vdir).getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    val marker = s"$vdir/_committed_$name"
-    if (!f.exists(new Path(marker))) {
-      rows.write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      touch(f, marker)
+  /** Land `rows` as the committed batch `name` of `table`'s served
+    * version; a batch whose marker already exists is a redelivery →
+    * no-op (names are the identity of an append). */
+  private def appendBatch(spark: SparkSession, storePath: String, table: String,
+                          owner: String, name: String)(rows: => DataFrame): Unit =
+    Compaction.append(spark, storePath, s"$storePath/$table", owner, name) { (vdir, dir) =>
+      if (!Compaction.committedNames(spark, vdir).contains(name))
+        rows.write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Build + persist the SRP index (planes table + bucketed corpus). The
     * bucket table is VERSIONED (`srp_buckets/v<k>` + `LATEST` marker, see
     * `Compaction`) so compaction swaps are invisible to live readers; the
     * plane table is tiny, immutable after init, and stays flat. */
-  def writeSrp(corpus: DataFrame, planes: Seq[Seq[Int]], storePath: String): Unit =
-    Compaction.withLease(corpus.sparkSession, storePath, s"writeSrp") {
-      val spark = corpus.sparkSession
-      import spark.implicits._
+  def writeSrp(corpus: DataFrame, planes: Seq[Seq[Int]], storePath: String): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    Compaction.init(spark, storePath, s"$storePath/$SrpBuckets", "writeSrp") { dir =>
       planes.zipWithIndex
         .map { case (p, i) => (i, p.map(_.toFloat)) }
         .toDF("plane_id", "weights")
         .coalesce(1).write.mode("overwrite").parquet(s"$storePath/$SrpPlanes")
-      val root = s"$storePath/$SrpBuckets"
-      Compaction.clearRoot(spark, root) // re-init must not keep stale batches
-      commitBatch(
-        SimilaritySearch.withBucket(graft.core.Spread.byKey(corpus, col("vec_id")), planes)
-          .select(col("vec_id"), col("embedding"),
-            SimilaritySearch.l2Norm(col("embedding")).as("nrm"), col("bucket"))
-          .repartition(col("bucket")).sortWithinPartitions("bucket", "vec_id"),
-        Compaction.initDir(root), "base")
-      Compaction.commit(spark, root, 0L)
+      SimilaritySearch.withBucket(graft.core.Spread.byKey(corpus, col("vec_id")), planes)
+        .select(col("vec_id"), col("embedding"),
+          SimilaritySearch.l2Norm(col("embedding")).as("nrm"), col("bucket"))
+        .repartition(col("bucket")).sortWithinPartitions("bucket", "vec_id")
+        .write.mode("overwrite").parquet(dir)
     }
+  }
 
   /** Build + persist the IVF index (centroids + inverted lists). The
     * centroid table may be the deterministic sample (`ivfCentroids`) or a
     * trained one (`trainedCentroids`) — the layout is identical. */
   def writeIvf(corpus: DataFrame, cents: DataFrame, storePath: String): Unit =
-    Compaction.withLease(corpus.sparkSession, storePath, s"writeIvf") {
+    Compaction.init(corpus.sparkSession, storePath, s"$storePath/$IvfLists", "writeIvf") { dir =>
       val c = graft.core.Caches.cacheOnce(cents) // feeds the write AND the lists build
       c.coalesce(1).write.mode("overwrite").parquet(s"$storePath/$IvfCentroids")
-      val root = s"$storePath/$IvfLists"
-      Compaction.clearRoot(corpus.sparkSession, root) // re-init must not keep stale batches
-      commitBatch(
-        SimilaritySearch.ivfLists(corpus, c)
-          .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id"),
-        Compaction.initDir(root), "base")
-      Compaction.commit(corpus.sparkSession, root, 0L)
+      SimilaritySearch.ivfLists(corpus, c)
+        .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id")
+        .write.mode("overwrite").parquet(dir)
     }
 
   /** Append a delta corpus to the persisted SRP index. The delta is
@@ -139,15 +105,13 @@ object AnnStore {
   def appendSrp(delta: DataFrame, storePath: String,
                 batchName: Option[String] = None): Unit = {
     val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    Compaction.withLease(spark, storePath, s"appendSrp:$name") {
-      commitBatch(
-        SimilaritySearch.withBucket(graft.core.Spread.byKey(delta, col("vec_id")),
-            readPlanes(spark, storePath))
-          .select(col("vec_id"), col("embedding"),
-            SimilaritySearch.l2Norm(col("embedding")).as("nrm"), col("bucket"))
-          .repartition(col("bucket")).sortWithinPartitions("bucket", "vec_id"),
-        Compaction.currentDir(spark, s"$storePath/$SrpBuckets"), name)
+    val name = Compaction.batchName(batchName)
+    appendBatch(spark, storePath, SrpBuckets, s"appendSrp:$name", name) {
+      SimilaritySearch.withBucket(graft.core.Spread.byKey(delta, col("vec_id")),
+          readPlanes(spark, storePath))
+        .select(col("vec_id"), col("embedding"),
+          SimilaritySearch.l2Norm(col("embedding")).as("nrm"), col("bucket"))
+        .repartition(col("bucket")).sortWithinPartitions("bucket", "vec_id")
     }
   }
 
@@ -162,13 +126,11 @@ object AnnStore {
   def appendIvf(delta: DataFrame, storePath: String,
                 batchName: Option[String] = None): Unit = {
     val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    Compaction.withLease(spark, storePath, s"appendIvf:$name") {
-      commitBatch(
-        SimilaritySearch.ivfLists(delta,
-            spark.read.parquet(s"$storePath/$IvfCentroids"))
-          .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id"),
-        Compaction.currentDir(spark, s"$storePath/$IvfLists"), name)
+    val name = Compaction.batchName(batchName)
+    appendBatch(spark, storePath, IvfLists, s"appendIvf:$name", name) {
+      SimilaritySearch.ivfLists(delta,
+          spark.read.parquet(s"$storePath/$IvfCentroids"))
+        .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id")
     }
   }
 
@@ -183,7 +145,7 @@ object AnnStore {
   def writeIvfPq(corpus: DataFrame, m: Int, dim: Int, codeMod: Int,
                  centroidMod: Int, storePath: String,
                  sampleFilter: org.apache.spark.sql.Column = lit(true)): Unit =
-    Compaction.withLease(corpus.sparkSession, storePath, s"writeIvfPq") {
+    Compaction.init(corpus.sparkSession, storePath, s"$storePath/$IvfPqLists", "writeIvfPq") { dir =>
       val spark = corpus.sparkSession
       // sampleFilter bounds the UNIVERSE the codebook and centroid samples
       // draw from (writeIvfPqResidual's contract): index parameters are
@@ -216,15 +178,11 @@ object AnnStore {
       // plain IVF index (whose centroids sample the RAW corpus, not the
       // reconstruction) without the two clobbering each other
       cents.coalesce(1).write.mode("overwrite").parquet(s"$storePath/$IvfPqCentroids")
-      val root = s"$storePath/$IvfPqLists"
-      Compaction.clearRoot(spark, root) // re-init must not keep stale batches
-      commitBatch(
-        SimilaritySearch.ivfLists(packed.select(col("vec_id"), col("embedding")), cents)
-          .select(col("cent_id"), col("vec_id"), col("nrm"))
-          .join(packed.select(col("vec_id"), col("codes")), Seq("vec_id"))
-          .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id"),
-        Compaction.initDir(root), "base")
-      Compaction.commit(spark, root, 0L)
+      SimilaritySearch.ivfLists(packed.select(col("vec_id"), col("embedding")), cents)
+        .select(col("cent_id"), col("vec_id"), col("nrm"))
+        .join(packed.select(col("vec_id"), col("codes")), Seq("vec_id"))
+        .repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id")
+        .write.mode("overwrite").parquet(dir)
     }
 
   /** IVF-PQ top-k served from the persisted index: queries rank against
@@ -251,18 +209,14 @@ object AnnStore {
   def writeIvfPqResidual(corpus: DataFrame, m: Int, dim: Int, codeMod: Int,
                          centroidMod: Int, storePath: String,
                          sampleFilter: org.apache.spark.sql.Column = lit(true)): Unit =
-    Compaction.withLease(corpus.sparkSession, storePath, "writeIvfPqResidual") {
-      val spark = corpus.sparkSession
+    Compaction.init(corpus.sparkSession, storePath, s"$storePath/$IvfPqResLists",
+        "writeIvfPqResidual") { dir =>
       val (cents, books, codedLists) = SimilaritySearch.ivfPqResidualIndex(
         corpus, m, dim, codeMod, centroidMod, sampleFilter)
       cents.coalesce(1).write.mode("overwrite").parquet(s"$storePath/$IvfPqResCentroids")
       books.coalesce(1).write.mode("overwrite").parquet(s"$storePath/$IvfPqResCodebooks")
-      val root = s"$storePath/$IvfPqResLists"
-      Compaction.clearRoot(spark, root) // re-init must not keep stale batches
-      commitBatch(
-        codedLists.repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id"),
-        Compaction.initDir(root), "base")
-      Compaction.commit(spark, root, 0L)
+      codedLists.repartition(col("cent_id")).sortWithinPartitions("cent_id", "vec_id")
+        .write.mode("overwrite").parquet(dir)
     }
 
   /** Residual IVF-PQ top-k served from the persisted index: queries rank
@@ -297,12 +251,8 @@ object AnnStore {
     * call time, so a frame built over this stays on its view however
     * often it re-evaluates, even across a concurrent compaction (the
     * previous version is retained — `Compaction`'s reader guarantee). */
-  private def readTree(spark: SparkSession, path: String): DataFrame = {
-    val vdir = Compaction.currentDir(spark, path)
-    val dirs = committedDirs(Compaction.fs(spark, path), vdir)
-    require(dirs.nonEmpty, s"no committed batches under $vdir — initialize the store first")
-    spark.read.parquet(dirs: _*)
-  }
+  private def readTree(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(Compaction.served(spark, path): _*)
 
   /** Compact the SRP bucket table: fold the committed batch directories
     * (base + appends + streaming ingest) into one freshly-partitioned
@@ -327,23 +277,11 @@ object AnnStore {
 
   private def compactTable(spark: SparkSession, storePath: String,
                            table: String, key: String): Unit =
-    Compaction.withLease(spark, storePath, s"compact:$table") {
-      val root = s"$storePath/$table"
-      val cur = Compaction.currentVersion(spark, root).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $root"))
-      val dirs = committedDirs(Compaction.fs(spark, root), s"$root/v$cur")
-      // UNCONDITIONAL rewrite (no commitBatch skip): v<cur+1> is not served
-      // until the version marker advances, and a compaction that crashed
-      // after the batch marker but before that advance must not let the
-      // retry serve its stale point-in-time copy — appends may have landed
-      // in v<cur> since.
-      val next = s"$root/v${cur + 1}"
-      spark.read.parquet(dirs: _*)
-        .repartition(col(key)).sortWithinPartitions(key, "vec_id")
-        .write.mode("overwrite").parquet(s"$next/batch_base")
-      touch(Compaction.fs(spark, root), s"$next/_committed_base")
-      Compaction.commit(spark, root, cur + 1)
-      Compaction.pruneBelow(spark, root, cur)
+    Compaction.compact(spark, storePath, s"$storePath/$table", s"compact:$table") {
+      (vdir, dest) =>
+        spark.read.parquet(Compaction.committed(spark, vdir): _*)
+          .repartition(col(key)).sortWithinPartitions(key, "vec_id")
+          .write.mode("overwrite").parquet(dest)
     }
 
   /** SRP top-k served from the persisted index: queries are bucketed with

@@ -29,7 +29,7 @@ import graft.functions.TextFunctions.tokensWs
  * other stores share); a redelivery under the same `batchName` overwrites
  * the same directory — idempotent, marker-last.
  *
- * LAYOUT (`Compaction`/`DedupStore` protocol): one versioned root,
+ * LAYOUT (`Compaction` protocol): one versioned root,
  * `bm25_index/v<k>/batch_<name>/{postings,doclens,stats}` committed by a
  * trailing `_committed_<name>` marker; `compact` folds committed batches
  * into the next version's base batch (postings/doclens by union, stats
@@ -40,15 +40,6 @@ object Bm25Store {
   val Root = "bm25_index"
 
   private def root(storePath: String) = s"$storePath/$Root"
-
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
 
   private def writeBatch(docs: DataFrame, dir: String,
                          idCol: String, textCol: String): Unit = {
@@ -65,17 +56,10 @@ object Bm25Store {
 
   /** Initialize the index from the base corpus (version 0, batch_base). */
   def write(docs: DataFrame, storePath: String,
-            idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    Compaction.withLease(spark, storePath, "bm25:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      writeBatch(docs, s"$vdir/batch_base", idCol, textCol)
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            idCol: String = "doc_id", textCol: String = "text"): Unit =
+    Compaction.init(docs.sparkSession, storePath, root(storePath), "bm25:write") { dir =>
+      writeBatch(docs, dir, idCol, textCol)
     }
-  }
 
   /** Fold one crawl delta (disjoint doc ids) into the index: one
     * tokenize pass over the DELTA only, batch dir first, marker LAST.
@@ -83,26 +67,16 @@ object Bm25Store {
   def append(delta: DataFrame, storePath: String,
              batchName: Option[String] = None,
              idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"bm25:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      writeBatch(delta, s"$vdir/batch_$name", idCol, textCol)
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"bm25:append:$name", name) { (_, dir) =>
+      writeBatch(delta, dir, idCol, textCol)
     }
   }
 
   private def committed(spark: SparkSession, storePath: String,
-                        sub: String): Seq[String] = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed batches under $vdir — write() first")
-    dirs.map(d => s"$d/$sub")
-  }
+                        sub: String): Seq[String] =
+    Compaction.served(spark, root(storePath)).map(d => s"$d/$sub")
 
   /** Corpus scalars at the served version: (n_docs, avgdl). */
   def stats(spark: SparkSession, storePath: String): DataFrame =
@@ -146,23 +120,14 @@ object Bm25Store {
   /** Fold committed batches into the next version's base batch (postings
     * and doclens by union, stats re-summed); readers never stop. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "bm25:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), s"$r/v$cur",
-        "_committed_", "batch_", None)
+    Compaction.compact(spark, storePath, root(storePath), "bm25:compact") { (vdir, dest) =>
+      val dirs = Compaction.committed(spark, vdir)
       spark.read.parquet(dirs.map(d => s"$d/postings"): _*)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base/postings")
+        .write.mode("overwrite").parquet(s"$dest/postings")
       spark.read.parquet(dirs.map(d => s"$d/doclens"): _*)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base/doclens")
+        .write.mode("overwrite").parquet(s"$dest/doclens")
       spark.read.parquet(dirs.map(d => s"$d/stats"): _*)
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base/stats")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+        .write.mode("overwrite").parquet(s"$dest/stats")
     }
 }

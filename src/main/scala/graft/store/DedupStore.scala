@@ -1,6 +1,5 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Caches
@@ -55,59 +54,23 @@ object DedupStore {
 
   private def root(storePath: String) = s"$storePath/$Signatures"
 
-  private def requireName(name: String): Unit =
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-
   /** Initialize the store: persist the signature table of an
     * (ideally already-deduplicated) base corpus as version 0's base
     * batch. */
   def write(docs: DataFrame, n: Int, numPerms: Int, storePath: String,
-            idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    Compaction.withLease(spark, storePath, "dedup:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r) // re-init must not keep stale batches
-      val vdir = Compaction.initDir(r)
+            idCol: String = "doc_id", textCol: String = "text"): Unit =
+    Compaction.init(docs.sparkSession, storePath, root(storePath), "dedup:write") { dir =>
       Dedup.minHashSignatures(docs, n, numPerms, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+        .write.mode("overwrite").parquet(dir)
     }
-  }
-
-  private[store] def touch(f: FileSystem, path: String): Unit =
-    f.create(new Path(path), true).close()
-
-  /** Committed batch directories under a version dir with the given
-    * marker/dir prefix pair — the ONLY rows a reader may see. */
-  private[store] def committedDirs(f: FileSystem, vdir: String,
-                            markerPrefix: String, dirPrefix: String,
-                            exclude: Option[String]): Seq[String] = {
-    val base = new Path(vdir)
-    if (!f.exists(base)) Seq.empty
-    else f.listStatus(base).toSeq
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .collect { case nm if nm.startsWith(markerPrefix) => nm.drop(markerPrefix.length) }
-      .filterNot(exclude.contains)
-      .map(nm => s"$vdir/$dirPrefix$nm")
-      .filter(d => f.exists(new Path(d)))
-  }
 
   /** The signature view over one version dir: committed batches minus
-    * committed tombstones, pinned to the directories present NOW (later
-    * appends add new batch dirs, so a frame built here stays stable
-    * however often it re-evaluates). `exclude` drops one batch name from
-    * the view — `dedupDelta` passes its own, making retries exact. */
+    * committed tombstones. `exclude` drops one batch name from the view —
+    * `dedupDelta` passes its own, making retries exact. */
   private def viewOf(spark: SparkSession, vdir: String,
                      exclude: Option[String]): DataFrame = {
-    val f = new Path(vdir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = committedDirs(f, vdir, "_committed_", "batch_", exclude)
-    require(batches.nonEmpty,
-      s"no committed signature batches under $vdir — initialize with write()")
-    val sigs = spark.read.parquet(batches: _*)
-    val tombs = committedDirs(f, vdir, "_retracted_", "tomb_", None)
+    val sigs = spark.read.parquet(Compaction.committed(spark, vdir, exclude): _*)
+    val tombs = Compaction.committedDirs(spark, vdir, "_retracted_", "tomb_")
     if (tombs.isEmpty) sigs
     else sigs.join(spark.read.parquet(tombs: _*).select(col("id")), Seq("id"), "left_anti")
   }
@@ -132,19 +95,14 @@ object DedupStore {
               retractId: Option[String] = None,
               idCol: String = "doc_id"): Unit = {
     val spark = ids.sparkSession
-    val name = retractId.getOrElse(freshName())
-    requireName(name)
+    val name = Compaction.batchName(retractId)
     Compaction.withLease(spark, storePath, s"dedup:retract:$name") {
-      val r = root(storePath)
-      val vdir = Compaction.currentDir(spark, r)
+      val vdir = Compaction.currentDir(spark, root(storePath))
       ids.select(col(idCol).cast("long").as("id")).distinct()
         .write.mode("overwrite").parquet(s"$vdir/tomb_$name")
-      touch(Compaction.fs(spark, r), s"$vdir/_retracted_$name")
+      Compaction.touch(spark, s"$vdir/_retracted_$name")
     }
   }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** Compact the signature table: every `dedupDelta` appends a batch
     * directory and every `retract` a tombstone, and a long-lived store
@@ -157,17 +115,9 @@ object DedupStore {
     * point-in-time copy would land in the superseded version, so it now
     * fails loudly instead. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "dedup:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      viewOf(spark, s"$r/v$cur", None).repartition(col("id"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "dedup:compact") { (vdir, dest) =>
+      viewOf(spark, vdir, None).repartition(col("id"))
+        .write.mode("overwrite").parquet(dest)
     }
 
   /**
@@ -189,14 +139,9 @@ object DedupStore {
     require(numPerms % bands == 0, s"bands $bands must divide numPerms $numPerms")
     val spark = delta.sparkSession
     val r = numPerms / bands
-    val rt = root(storePath)
-    val name = deltaId.getOrElse(freshName())
-    requireName(name)
-    // The lease covers view resolution THROUGH the append: a compaction
-    // sliding in between would strand the survivors' batch in a
-    // superseded version.
-    Compaction.withLease(spark, storePath, s"dedup:delta:$name") {
-      val vdir = Compaction.currentDir(spark, rt)
+    val name = Compaction.batchName(deltaId)
+    Compaction.append(spark, storePath, root(storePath),
+        s"dedup:delta:$name", name) { (vdir, dir) =>
       // Exact-first: copies of shingleable delta docs collapse to their
       // minimum id before any signature or band join exists — the template
       // mega-cluster never reaches the candidate stage.
@@ -231,12 +176,10 @@ object DedupStore {
           .withColumnRenamed("id", idCol)
           .unionByName(exactDropped))
       val kept = Dedup.keepCorpus(delta, dropped, idCol, dropped.count())
-      // Ingest: survivors' signatures join the store for the NEXT delta —
-      // batch dir first (overwrite: a crashed attempt's partials vanish),
-      // commit marker LAST.
+      // Ingest: survivors' signatures join the store for the NEXT delta
+      // (overwrite: a crashed attempt's partials vanish).
       dsig.join(kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      touch(Compaction.fs(spark, rt), s"$vdir/_committed_$name")
+        .write.mode("overwrite").parquet(dir)
       kept
     }
   }

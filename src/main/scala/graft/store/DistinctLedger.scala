@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
  * sketches IS the sketch of the union, bit-for-bit, however the stream
  * was split (spec-gated), so appends never degrade accuracy.
  *
- * Layout: the `Compaction`/`DedupStore` protocol — one versioned root,
+ * Layout: the `Compaction` protocol — one versioned root,
  * `distinct_hll/v<k>/batch_<name>` parquet of (scope, sk binary)
  * committed by a trailing `_committed_<name>` marker; redelivery under
  * one batch name overwrites the same directory (idempotent — and even
@@ -33,15 +33,6 @@ object DistinctLedger {
 
   private def root(storePath: String) = s"$storePath/$Root"
 
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   private def sketchBatch(df: DataFrame, scopeCol: String,
                           valueCol: String): DataFrame =
     df.groupBy(col(scopeCol).as("scope"))
@@ -49,66 +40,34 @@ object DistinctLedger {
 
   /** Initialize the ledger from the base corpus (version 0). */
   def write(df: DataFrame, storePath: String,
-            scopeCol: String, valueCol: String): Unit = {
-    val spark = df.sparkSession
-    Compaction.withLease(spark, storePath, "hll:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      sketchBatch(df, scopeCol, valueCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            scopeCol: String, valueCol: String): Unit =
+    Compaction.init(df.sparkSession, storePath, root(storePath), "hll:write") { dir =>
+      sketchBatch(df, scopeCol, valueCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Fold one delta: one sketch pass over the DELTA only, marker LAST. */
   def append(delta: DataFrame, storePath: String,
              scopeCol: String, valueCol: String,
              batchName: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"hll:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      sketchBatch(delta, scopeCol, valueCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"hll:append:$name", name) { (_, dir) =>
+      sketchBatch(delta, scopeCol, valueCol).write.mode("overwrite").parquet(dir)
     }
-  }
-
-  private def view(spark: SparkSession, storePath: String): DataFrame = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed sketch batches under $vdir — write() first")
-    spark.read.parquet(dirs: _*)
   }
 
   /** Served estimates: (scope, distinct_est) — register-max union across
     * committed batches, one sketch row per scope read, never the corpus. */
   def estimates(spark: SparkSession, storePath: String): DataFrame =
-    view(spark, storePath)
+    spark.read.parquet(Compaction.served(spark, root(storePath)): _*)
       .groupBy(col("scope"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("distinct_est"))
 
   /** Fold committed batches into one base sketch row per scope. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "hll:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), s"$r/v$cur",
-        "_committed_", "batch_", None)
-      spark.read.parquet(dirs: _*)
+    Compaction.compact(spark, storePath, root(storePath), "hll:compact") { (vdir, dest) =>
+      spark.read.parquet(Compaction.committed(spark, vdir): _*)
         .groupBy(col("scope")).agg(hll_union_agg(col("sk")).as("sk"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+        .write.mode("overwrite").parquet(dest)
     }
 }

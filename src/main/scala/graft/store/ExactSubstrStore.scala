@@ -54,13 +54,6 @@ object ExactSubstrStore {
 
   private def root(storePath: String) = s"$storePath/$WindowHashes"
 
-  private def requireName(name: String): Unit =
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   private def distinctHashes(docs: DataFrame, windowTokens: Int,
                              idCol: String, textCol: String): DataFrame =
     Dedup.substrWindowHashes(
@@ -75,28 +68,10 @@ object ExactSubstrStore {
   def write(docs: DataFrame, windowTokens: Int, storePath: String,
             idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(windowTokens > 0, "windowTokens must be positive")
-    val spark = docs.sparkSession
-    Compaction.withLease(spark, storePath, "substr:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r) // re-init must not keep stale batches
-      val vdir = Compaction.initDir(r)
+    Compaction.init(docs.sparkSession, storePath, root(storePath), "substr:write") { dir =>
       distinctHashes(docs, windowTokens, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+        .write.mode("overwrite").parquet(dir)
     }
-  }
-
-  /** The hash view over one version dir: committed batches, pinned to
-    * the directories present NOW. `exclude` drops one batch name —
-    * `dedupDelta` passes its own, making retries exact. */
-  private def viewOf(spark: SparkSession, vdir: String,
-                     exclude: Option[String]): DataFrame = {
-    val f = Compaction.fs(spark, vdir)
-    val batches = DedupStore.committedDirs(f, vdir, "_committed_", "batch_", exclude)
-    require(batches.nonEmpty,
-      s"no committed window-hash batches under $vdir — initialize with write()")
-    spark.read.parquet(batches: _*)
   }
 
   /** The stored window-hash table (h), at the version served when this
@@ -104,7 +79,7 @@ object ExactSubstrStore {
     * test EXISTENCE, so duplicates are harmless until `compact` folds
     * them. */
   def hashes(spark: SparkSession, storePath: String): DataFrame =
-    viewOf(spark, Compaction.currentDir(spark, root(storePath)), None)
+    spark.read.parquet(Compaction.served(spark, root(storePath)): _*)
 
   /** Compact the hash table: fold committed batches into the next
     * version's distinct base batch and advance the marker (listing +
@@ -112,17 +87,9 @@ object ExactSubstrStore {
     * scan on a long-lived store). Dedup decisions are unaffected — same
     * hash SET. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "substr:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      viewOf(spark, s"$r/v$cur", None).distinct()
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "substr:compact") { (vdir, dest) =>
+      spark.read.parquet(Compaction.committed(spark, vdir): _*).distinct()
+        .write.mode("overwrite").parquet(dest)
     }
 
   /**
@@ -141,15 +108,11 @@ object ExactSubstrStore {
     require(windowTokens > 0, "windowTokens must be positive")
     val spark = delta.sparkSession
     val L = windowTokens
-    val rt = root(storePath)
-    val name = deltaId.getOrElse(freshName())
-    requireName(name)
-    // The lease covers view resolution THROUGH the append: a compaction
-    // sliding in between would strand the survivors' batch in a
-    // superseded version.
-    Compaction.withLease(spark, storePath, s"substr:delta:$name") {
-      val vdir = Compaction.currentDir(spark, rt)
-      val stored = viewOf(spark, vdir, exclude = Some(name))
+    val name = Compaction.batchName(deltaId)
+    Compaction.append(spark, storePath, root(storePath),
+        s"substr:delta:$name", name) { (vdir, dir) =>
+      // the view excludes this delta's own batch, so a retry is exact
+      val stored = spark.read.parquet(Compaction.committed(spark, vdir, Some(name)): _*)
       val toks = Dedup.substrTokens(delta, idCol, textCol)
       val wins = Dedup.substrWindowHashes(toks, L, idCol)
       // one hash-keyed exchange serves both rules: the intra-delta
@@ -166,11 +129,10 @@ object ExactSubstrStore {
       val kept = Caches.cacheOnce(
         Dedup.substrRemoveIntervals(toks, dups, idCol, textCol))
       // Ingest: survivors' KEPT text re-windows (junction-straddling
-      // windows included) — batch dir first (overwrite: a crashed
-      // attempt's partials vanish), commit marker LAST.
+      // windows included) — overwrite, so a crashed attempt's partials
+      // vanish.
       distinctHashes(kept, L, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, rt), s"$vdir/_committed_$name")
+        .write.mode("overwrite").parquet(dir)
       kept
     }
   }

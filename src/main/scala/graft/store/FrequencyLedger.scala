@@ -31,15 +31,6 @@ object FrequencyLedger {
 
   private def root(storePath: String) = s"$storePath/$Root"
 
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   /** Column index of `key` in hash row `r` (0-based). */
   def colOf(key: Column, r: Int): Column = {
     import graft.functions.TextFunctions.{hash60, hashPermOf, HashPermMod}
@@ -58,44 +49,28 @@ object FrequencyLedger {
       .agg(count(lit(1)).as("cnt"))
 
   /** Initialize the ledger from the base corpus (version 0). */
-  def write(df: DataFrame, storePath: String, keyCol: String): Unit = {
-    val spark = df.sparkSession
-    Compaction.withLease(spark, storePath, "cms:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      cells(df, keyCol).write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+  def write(df: DataFrame, storePath: String, keyCol: String): Unit =
+    Compaction.init(df.sparkSession, storePath, root(storePath), "cms:write") { dir =>
+      cells(df, keyCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Fold one delta: one sketch pass over the DELTA only, marker LAST;
     * redelivery under the same name overwrites in place. */
   def append(delta: DataFrame, storePath: String, keyCol: String,
              batchName: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"cms:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      cells(delta, keyCol).write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"cms:append:$name", name) { (_, dir) =>
+      cells(delta, keyCol).write.mode("overwrite").parquet(dir)
     }
   }
 
+  private def fold(batches: DataFrame): DataFrame =
+    batches.groupBy(col("row"), col("col")).agg(sum(col("cnt")).as("cnt"))
+
   /** Folded sketch across committed batches: (row, col, cnt). */
-  def sketch(spark: SparkSession, storePath: String): DataFrame = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed sketch batches under $vdir — write() first")
-    spark.read.parquet(dirs: _*)
-      .groupBy(col("row"), col("col"))
-      .agg(sum(col("cnt")).as("cnt"))
-  }
+  def sketch(spark: SparkSession, storePath: String): DataFrame =
+    fold(spark.read.parquet(Compaction.served(spark, root(storePath)): _*))
 
   /** Point estimates for a probe panel: (key, est) = min over hash rows
     * of the addressed cells. The folded sketch (≤ Depth·Width rows)
@@ -118,19 +93,8 @@ object FrequencyLedger {
   /** Fold committed batches into one base cell grid (counts add — the
     * fold is exact; spec-gated). */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "cms:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), s"$r/v$cur",
-        "_committed_", "batch_", None)
-      spark.read.parquet(dirs: _*)
-        .groupBy(col("row"), col("col")).agg(sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "cms:compact") { (vdir, dest) =>
+      fold(spark.read.parquet(Compaction.committed(spark, vdir): _*))
+        .write.mode("overwrite").parquet(dest)
     }
 }

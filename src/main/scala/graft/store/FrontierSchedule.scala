@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
  * but a crawl loop that already committed N fetches against a host must
  * schedule its NEXT delta from slot N. The state is per-host committed
  * slot COUNTS — losslessly additive rows (host, n), kilobytes at any
- * corpus scale — persisted under the `Compaction`/`DedupStore`
+ * corpus scale — persisted under the `Compaction`
  * marker-last protocol (`frontier_sched/v<k>/batch_<name>`), the same
  * crash/redelivery discipline as the seen-URL ledger it sits beside
  * (`FrontierStore`).
@@ -39,34 +39,12 @@ object FrontierSchedule {
 
   private def root(storePath: String) = s"$storePath/$Root"
 
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   /** Folded per-host committed slot counts, optionally excluding one
     * batch (the redelivery self-exclusion view). */
   private def stateOf(spark: SparkSession, vdir: String,
-                      exclude: Option[String]): DataFrame = {
-    val f = new org.apache.hadoop.fs.Path(vdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches =
-      DedupStore.committedDirs(f, vdir, "_committed_", "batch_", exclude)
-    if (batches.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("host",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(batches: _*)
+                      exclude: Option[String]): DataFrame =
+    spark.read.parquet(Compaction.committed(spark, vdir, exclude): _*)
       .groupBy(col("host")).agg(sum(col("n")).as("n"))
-  }
 
   /** Schedule one frame continuing from `offsets` (host, n): slot =
     * stored offset + in-batch (priority DESC, url) rank, capped. */
@@ -97,17 +75,10 @@ object FrontierSchedule {
             hostCol: String = "host", priCol: String = "priority",
             urlCol: String = "url"): DataFrame = {
     require(delayMs >= 0, "delayMs must be non-negative")
-    val spark = frontier.sparkSession
-    Compaction.withLease(spark, storePath, "sched:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
+    Compaction.init(frontier.sparkSession, storePath, root(storePath), "sched:write") { dir =>
       val sched = graft.operators.Frontier.schedule(
         frontier, delayMs, maxPerHost, hostCol, priCol, urlCol)
-      countsOf(sched, hostCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+      countsOf(sched, hostCol).write.mode("overwrite").parquet(dir)
       sched
     }
   }
@@ -124,17 +95,13 @@ object FrontierSchedule {
                     urlCol: String = "url"): DataFrame = {
     require(delayMs >= 0, "delayMs must be non-negative")
     val spark = delta.sparkSession
-    val name = batchId.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"sched:delta:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
+    val name = Compaction.batchName(batchId)
+    Compaction.append(spark, storePath, root(storePath),
+        s"sched:delta:$name", name) { (vdir, dir) =>
       val sched = continueFrom(delta,
         stateOf(spark, vdir, exclude = Some(name)),
         delayMs, maxPerHost, hostCol, priCol, urlCol)
-      countsOf(sched, hostCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+      countsOf(sched, hostCol).write.mode("overwrite").parquet(dir)
       sched
     }
   }
@@ -145,16 +112,7 @@ object FrontierSchedule {
 
   /** Fold committed count batches into one base batch. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "sched:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      stateOf(spark, s"$r/v$cur", None)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "sched:compact") { (vdir, dest) =>
+      stateOf(spark, vdir, None).write.mode("overwrite").parquet(dest)
     }
 }

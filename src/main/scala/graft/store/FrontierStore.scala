@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
  * batch always beats a later offer — so folding deltas in arrival order
  * equals the one-shot keep-first over their union (the q225 oracle law).
  *
- * LAYOUT — the `Compaction`/`DedupStore` protocol verbatim: versioned
+ * LAYOUT — the `Compaction` protocol: versioned
  * root `frontier_urls/v<k>/` with one `batch_<name>` parquet per offer
  * committed by a trailing `_committed_<name>` marker, `tomb_<name>`
  * retraction batches under `_retracted_<name>`, a writer lease, and
@@ -52,17 +52,6 @@ object FrontierStore {
 
   private def root(storePath: String) = s"$storePath/$Root"
 
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base",
-      "batch name 'base' is reserved for the compacted ledger batch: " +
-        "offer/retract under it would exclude-and-overwrite the base frontier")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   /** Keep-first collapse of one entry frame: (canonical, doc_id = min id
     * per canonical). Canonicalization is map-only; the collapse is one
     * hash aggregate that partial-aggregates map-side. */
@@ -76,32 +65,18 @@ object FrontierStore {
   /** Initialize the ledger: keep-first collapse of the base frontier as
     * version 0's base batch. */
   def write(entries: DataFrame, storePath: String,
-            urlCol: String = "url", idCol: String = "doc_id"): Unit = {
-    val spark = entries.sparkSession
-    Compaction.withLease(spark, storePath, "frontier:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      canonMin(entries, urlCol, idCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            urlCol: String = "url", idCol: String = "doc_id"): Unit =
+    Compaction.init(entries.sparkSession, storePath, root(storePath), "frontier:write") { dir =>
+      canonMin(entries, urlCol, idCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** The ledger view over one version dir: committed batches minus
     * row-level tombstones; `exclude` drops one batch from the view so an
     * `offer` retry under the same name recomputes exactly. */
   private def viewOf(spark: SparkSession, vdir: String,
                      exclude: Option[String]): DataFrame = {
-    val f = new org.apache.hadoop.fs.Path(vdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches =
-      DedupStore.committedDirs(f, vdir, "_committed_", "batch_", exclude)
-    require(batches.nonEmpty,
-      s"no committed frontier batches under $vdir — initialize with write()")
-    val rows = spark.read.parquet(batches: _*)
-    val tombs = DedupStore.committedDirs(f, vdir, "_retracted_", "tomb_", None)
+    val rows = spark.read.parquet(Compaction.committed(spark, vdir, exclude): _*)
+    val tombs = Compaction.committedDirs(spark, vdir, "_retracted_", "tomb_")
     if (tombs.isEmpty) rows
     else rows.join(spark.read.parquet(tombs: _*),
       Seq("canonical", "doc_id"), "left_anti")
@@ -123,17 +98,14 @@ object FrontierStore {
             batchId: Option[String] = None,
             urlCol: String = "url", idCol: String = "doc_id"): DataFrame = {
     val spark = entries.sparkSession
-    val name = batchId.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"frontier:offer:$name") {
-      val rt = root(storePath)
-      val vdir = Compaction.currentDir(spark, rt)
-      val fresh = canonMin(entries, urlCol, idCol)
+    val name = Compaction.batchName(batchId)
+    Compaction.append(spark, storePath, root(storePath),
+        s"frontier:offer:$name", name) { (vdir, dir) =>
+      canonMin(entries, urlCol, idCol)
         .join(viewOf(spark, vdir, exclude = Some(name))
           .select(col("canonical")), Seq("canonical"), "left_anti")
-      fresh.write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, rt), s"$vdir/_committed_$name")
-      spark.read.parquet(s"$vdir/batch_$name")
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
     }
   }
 
@@ -146,33 +118,22 @@ object FrontierStore {
   def retract(rows: DataFrame, storePath: String,
               retractId: Option[String] = None): Unit = {
     val spark = rows.sparkSession
-    val name = retractId.getOrElse(freshName())
-    requireName(name)
+    val name = Compaction.batchName(retractId)
     Compaction.withLease(spark, storePath, s"frontier:retract:$name") {
-      val r = root(storePath)
-      val vdir = Compaction.currentDir(spark, r)
+      val vdir = Compaction.currentDir(spark, root(storePath))
       rows.select(col("canonical"), col("doc_id").cast("long").as("doc_id"))
         .distinct()
         .write.mode("overwrite").parquet(s"$vdir/tomb_$name")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_retracted_$name")
+      Compaction.touch(spark, s"$vdir/_retracted_$name")
     }
   }
 
   /** Fold committed batches minus tombstones into the next version's
-    * base batch and advance the marker (the `DedupStore.compact`
-    * protocol: writers are excluded by the lease; live readers keep
-    * their resolved version). */
+    * base batch and advance the marker (writers are excluded by the
+    * lease; live readers keep their resolved version). */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "frontier:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      viewOf(spark, s"$r/v$cur", None).repartition(col("canonical"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "frontier:compact") { (vdir, dest) =>
+      viewOf(spark, vdir, None).repartition(col("canonical"))
+        .write.mode("overwrite").parquet(dest)
     }
 }

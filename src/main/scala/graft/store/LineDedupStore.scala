@@ -50,15 +50,6 @@ object LineDedupStore {
 
   private def root(storePath: String) = s"$storePath/$LineDf"
 
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base",
-      "batch name 'base' is reserved for the store's fold product — a delta " +
-        "named 'base' would overwrite it and its retry would exclude the " +
-        "whole base view")
-  }
-
   /** Batch names folded into this version's base batch by compactions —
     * cumulative across versions; absent file = empty (pre-manifest
     * stores and fresh v0 trees). One name per line, UTF-8. */
@@ -83,19 +74,6 @@ object LineDedupStore {
     finally out.close()
   }
 
-  /** Committed batch NAMES (marker-backed) under a version dir. */
-  private def committedNames(spark: SparkSession, vdir: String): Set[String] = {
-    val f = Compaction.fs(spark, vdir)
-    val base = new org.apache.hadoop.fs.Path(vdir)
-    if (!f.exists(base)) Set.empty
-    else f.listStatus(base).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .collect { case nm if nm.startsWith("_committed_") => nm.drop("_committed_".length) }
-      .toSet
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
-
   private def dfCounts(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame =
     Dedup.lineDf(Dedup.lineKeyed(docs, idCol, textCol), idCol)
@@ -103,27 +81,14 @@ object LineDedupStore {
   /** Initialize the store: persist the base corpus's per-line-hash
     * document-frequency table as version 0's base batch. */
   def write(docs: DataFrame, storePath: String,
-            idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    Compaction.withLease(spark, storePath, "linedf:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      dfCounts(docs, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            idCol: String = "doc_id", textCol: String = "text"): Unit =
+    Compaction.init(docs.sparkSession, storePath, root(storePath), "linedf:write") { dir =>
+      dfCounts(docs, idCol, textCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   private def viewOf(spark: SparkSession, vdir: String,
-                     exclude: Option[String]): DataFrame = {
-    val f = Compaction.fs(spark, vdir)
-    val batches = DedupStore.committedDirs(f, vdir, "_committed_", "batch_", exclude)
-    require(batches.nonEmpty,
-      s"no committed line-df batches under $vdir — initialize with write()")
-    spark.read.parquet(batches: _*)
-  }
+                     exclude: Option[String]): DataFrame =
+    spark.read.parquet(Compaction.committed(spark, vdir, exclude): _*)
 
   /** The stored df table (h, df), SUMMED across committed batches, at
     * the version served when this is called. */
@@ -135,26 +100,18 @@ object LineDedupStore {
     * batch and advance the marker. Decisions are unaffected — same
     * per-hash totals. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "linedf:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      viewOf(spark, s"$r/v$cur", None)
+    Compaction.compact(spark, storePath, root(storePath), "linedf:compact") { (vdir, dest) =>
+      viewOf(spark, vdir, None)
         .groupBy(col("h")).agg(sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
+        .write.mode("overwrite").parquet(dest)
       // Record WHICH delta batches this base now contains (cumulative
       // with earlier folds) BEFORE the marker flips: a dedupDelta retry
       // consults this manifest to avoid re-appending counts the base
       // already carries. Crash before commit → old version still served,
       // manifest unreferenced; crash after → manifest committed with it.
-      writeFolded(spark, vdir,
-        foldedNames(spark, s"$r/v$cur") ++
-          (committedNames(spark, s"$r/v$cur") - "base"))
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+      // The manifest sits beside the base batch, in the next version.
+      writeFolded(spark, new org.apache.hadoop.fs.Path(dest).getParent.toString,
+        foldedNames(spark, vdir) ++ Compaction.committedNames(spark, vdir))
     }
 
   /**
@@ -169,18 +126,17 @@ object LineDedupStore {
                  deltaId: Option[String] = None): DataFrame = {
     require(maxDocFreq >= 1, "maxDocFreq must be positive")
     val spark = delta.sparkSession
-    val rt = root(storePath)
-    val name = deltaId.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"linedf:delta:$name") {
-      val vdir = Compaction.currentDir(spark, rt)
+    val name = Compaction.batchName(deltaId)
+    Compaction.append(spark, storePath, root(storePath),
+        s"linedf:delta:$name", name) { (vdir, dir) =>
       val keyed = Dedup.lineKeyed(delta, idCol, textCol)
       val ddf = Dedup.lineDf(keyed, idCol)
       // Redelivery after a compaction folded this delta's batch into
       // base: the counts can't be excluded by directory anymore, so
       // subtract the delta's own recomputed df from the stored totals —
       // (sdf − df) + df reproduces the first delivery's merged df
-      // exactly — and do NOT re-append the batch (base carries it).
+      // exactly — and do NOT re-append the batch (base carries it; with
+      // no batch directory written, nothing is committed).
       val folded = foldedNames(spark, vdir).contains(name)
       val stored0 = viewOf(spark, vdir, exclude = Some(name))
         .groupBy(col("h")).agg(sum(col("df")).as("sdf"))
@@ -196,11 +152,8 @@ object LineDedupStore {
       val out = Dedup.lineStrike(delta, keyed, hot, idCol, textCol)
       // Ingest: the delta's OWN df batch (pre-strike counts — the lines
       // existed in these documents; striking is presentation, the df
-      // ledger records what was seen). Batch dir first, marker LAST.
-      if (!folded) {
-        ddf.write.mode("overwrite").parquet(s"$vdir/batch_$name")
-        DedupStore.touch(Compaction.fs(spark, rt), s"$vdir/_committed_$name")
-      }
+      // ledger records what was seen).
+      if (!folded) ddf.write.mode("overwrite").parquet(dir)
       out
     }
   }

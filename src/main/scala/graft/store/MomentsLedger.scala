@@ -20,7 +20,7 @@ import graft.operators.Pca
  * 1e-9 rounding grid. The ledger's own fold is still deterministic:
  * per-index sums run in sorted-batch-directory order.)
  *
- * Layout: the `Compaction`/`DedupStore` marker-last protocol,
+ * Layout: the `Compaction` marker-last protocol,
  * `embed_moments/v<k>/batch_<name>` parquet of one (n, m) row;
  * redelivery under one batch name overwrites in place; `compact` folds
  * batches into one base row.
@@ -30,15 +30,6 @@ object MomentsLedger {
   val Root = "embed_moments"
 
   private def root(storePath: String) = s"$storePath/$Root"
-
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
 
   private def momRow(spark: SparkSession, mom: Pca.Mom): DataFrame = {
     val schema = StructType(Seq(
@@ -56,47 +47,30 @@ object MomentsLedger {
   }
 
   /** Initialize the ledger from the base corpus (version 0). */
-  def write(df: DataFrame, storePath: String, vecCol: String, d: Int): Unit = {
-    val spark = df.sparkSession
-    Compaction.withLease(spark, storePath, "mom:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      writeBatch(df, vecCol, d, s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+  def write(df: DataFrame, storePath: String, vecCol: String, d: Int): Unit =
+    Compaction.init(df.sparkSession, storePath, root(storePath), "mom:write") { dir =>
+      writeBatch(df, vecCol, d, dir)
     }
-  }
 
   /** Fold one delta: one moment pass over the DELTA only, marker LAST;
     * redelivery under the same name overwrites in place. */
   def append(delta: DataFrame, storePath: String, vecCol: String, d: Int,
              batchName: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"mom:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      writeBatch(delta, vecCol, d, s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"mom:append:$name", name) { (_, dir) =>
+      writeBatch(delta, vecCol, d, dir)
     }
   }
 
-  /** Served raw moments: per-index sums across committed batches in
-    * sorted-batch-directory order (a deterministic driver fold over
-    * kilobyte rows — the batch list is bounded, never the corpus). */
-  def served(spark: SparkSession, storePath: String): Pca.Mom = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed moment batches under $vdir — write() first")
-    val rows = dirs.sorted.map { dir =>
+  /** Per-index sums across batches in sorted-batch-directory order (a
+    * deterministic driver fold over kilobyte rows — the batch list is
+    * bounded, never the corpus). */
+  private def fold(spark: SparkSession, dirs: Seq[String]): Pca.Mom =
+    dirs.sorted.map { dir =>
       val row = spark.read.parquet(dir).head()
       Pca.Mom(row.getLong(0), row.getSeq[Double](1).toArray)
-    }
-    rows.reduce { (a, b) =>
+    }.reduce { (a, b) =>
       require(a.m.length == b.m.length,
         "moments ledger: batches disagree on dimension")
       val m = new Array[Double](a.m.length)
@@ -104,7 +78,10 @@ object MomentsLedger {
       while (i < m.length) { m(i) = a.m(i) + b.m(i); i += 1 }
       Pca.Mom(a.n + b.n, m)
     }
-  }
+
+  /** Served raw moments: the fold of the committed batches. */
+  def served(spark: SparkSession, storePath: String): Pca.Mom =
+    fold(spark, Compaction.served(spark, root(storePath)))
 
   /** Served covariance in the q198 long form — equal to the one-shot
     * `Pca.covarianceLong` over everything ingested. */
@@ -113,16 +90,8 @@ object MomentsLedger {
 
   /** Fold committed batches into one base moment row. */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "mom:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val folded = served(spark, storePath)
-      momRow(spark, folded).write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "mom:compact") { (vdir, dest) =>
+      momRow(spark, fold(spark, Compaction.committed(spark, vdir)))
+        .write.mode("overwrite").parquet(dest)
     }
 }

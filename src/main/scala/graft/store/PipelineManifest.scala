@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
  * overwritten by the next run.
  *
  * Retention: a pinned version stays readable under the same rule single-
- * store readers already rely on — `Compaction.pruneBelow` keeps each
+ * store readers already rely on — `Compaction.compact` keeps each
  * store's previous version until the one AFTER next lands. A pipeline
  * that republishes once per run (the intended cadence: stores commit,
  * then one `publish`) therefore never dangles; letting a store compact
@@ -63,17 +63,12 @@ object PipelineManifest {
             s"store '$name' at $storeRoot has no LATEST marker — commit it first"))
         s"$name\t$storeRoot\t$v"
       }
-      val next = Compaction.currentVersion(spark, manifestRoot)
-        .map(_ + 1).getOrElse(0L)
-      val vdir = s"$manifestRoot/v$next"
-      val f = Compaction.fs(spark, manifestRoot)
-      val out = f.create(new Path(s"$vdir/stores.tsv"), true)
-      try out.write(entries.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      Compaction.commit(spark, manifestRoot, next) // the atomic flip
-      if (next > 0) Compaction.pruneBelow(spark, manifestRoot, next - 1)
-      next
+      Compaction.advance(spark, manifestRoot) { vdir =>
+        val out = Compaction.fs(spark, manifestRoot).create(new Path(s"$vdir/stores.tsv"), true)
+        try out.write(entries.mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
     }
   }
 

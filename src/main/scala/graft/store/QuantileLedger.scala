@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
  * integer-valued doubles < 2^53) — bit-for-bit reproducible across
  * engines, so the whole serve path replays in oracle SQL.
  *
- * Layout: the `Compaction`/`DedupStore` protocol — one versioned root,
+ * Layout: the `Compaction` protocol — one versioned root,
  * `quantile_hist/v<k>/batch_<name>` committed by a trailing marker;
  * redelivery under one batch name overwrites the same directory
  * (idempotent); `compact` folds batches to one base histogram.
@@ -39,15 +39,6 @@ object QuantileLedger {
   val MaxValue = 1L << 52 // exact-double domain bound
 
   private def root(storePath: String) = s"$storePath/$Root"
-
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** Log-linear bucket id of a nonnegative long value — monotone in v.
     * v ≤ 32 → v; else 32 + (bits−6)·16 + sub + 1 where sub is the
@@ -81,47 +72,29 @@ object QuantileLedger {
 
   /** Initialize the ledger from the base corpus (version 0). */
   def write(df: DataFrame, storePath: String,
-            scopeCol: String, valueCol: String): Unit = {
-    val spark = df.sparkSession
-    Compaction.withLease(spark, storePath, "qhist:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      histBatch(df, scopeCol, valueCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            scopeCol: String, valueCol: String): Unit =
+    Compaction.init(df.sparkSession, storePath, root(storePath), "qhist:write") { dir =>
+      histBatch(df, scopeCol, valueCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Fold one delta: one histogram pass over the DELTA only, marker
     * LAST; redelivery under the same name overwrites in place. */
   def append(delta: DataFrame, storePath: String,
              scopeCol: String, valueCol: String,
              batchName: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"qhist:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      histBatch(delta, scopeCol, valueCol)
-        .write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"qhist:append:$name", name) { (_, dir) =>
+      histBatch(delta, scopeCol, valueCol).write.mode("overwrite").parquet(dir)
     }
   }
 
+  private def fold(batches: DataFrame): DataFrame =
+    batches.groupBy(col("scope"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
+
   /** Folded histogram across committed batches: (scope, bucket, cnt). */
-  def histogram(spark: SparkSession, storePath: String): DataFrame = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed histogram batches under $vdir — write() first")
-    spark.read.parquet(dirs: _*)
-      .groupBy(col("scope"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-  }
+  def histogram(spark: SparkSession, storePath: String): DataFrame =
+    fold(spark.read.parquet(Compaction.served(spark, root(storePath)): _*))
 
   /** Served quantiles: (scope, p, n, q_est) for every scope × p — rank
     * r = 1 + (n−1)·p over the bucket-cumulative counts, midpoint of the
@@ -148,19 +121,8 @@ object QuantileLedger {
   /** Fold committed batches into one base histogram (counts add — the
     * fold is exact, estimates cannot change; spec-gated). */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "qhist:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), s"$r/v$cur",
-        "_committed_", "batch_", None)
-      spark.read.parquet(dirs: _*)
-        .groupBy(col("scope"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "qhist:compact") { (vdir, dest) =>
+      fold(spark.read.parquet(Compaction.committed(spark, vdir): _*))
+        .write.mode("overwrite").parquet(dest)
     }
 }

@@ -33,16 +33,12 @@ object SimilarityStore {
 
   /** OP-06+08: write the thresholded pair table, laid out for per-item
     * point lookups (sorted within files by item_a_id → row-group pruning). */
-  def writeSimilarItems(pairs: DataFrame, storePath: String,
-                        numPartitions: Int = 0): Unit = {
-    val p = pairs.select(col("item_a_id").cast("long"),
-      col("item_b_id").cast("long"), col("scaled_score").cast("double"))
-    val laidOut =
-      (if (numPartitions > 0) p.repartition(numPartitions, col("item_a_id"))
-       else p.repartition(col("item_a_id")))
-        .sortWithinPartitions("item_a_id", "item_b_id")
-    laidOut.write.mode("overwrite").parquet(s"$storePath/$SimilarItems")
-  }
+  def writeSimilarItems(pairs: DataFrame, storePath: String): Unit =
+    pairs.select(col("item_a_id").cast("long"),
+        col("item_b_id").cast("long"), col("scaled_score").cast("double"))
+      .repartition(col("item_a_id"))
+      .sortWithinPartitions("item_a_id", "item_b_id")
+      .write.mode("overwrite").parquet(s"$storePath/$SimilarItems")
 
   /**
    * Warehouse-scale layout: the pair table as a BUCKETED catalog table —

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  * growth curve depends on consumption ORDER across the whole corpus,
  * which no per-batch additive state can reconstruct.
  *
- * Layout: the `Compaction`/`DedupStore` marker-last protocol,
+ * Layout: the `Compaction` marker-last protocol,
  * `token_counts/v<k>/batch_<name>` parquet of (gram, a, b, cnt) rows —
  * gram ∈ ('uni','bi'), b NULL for unigrams; redelivery under one batch
  * name overwrites in place; `compact` folds batches into one base grid.
@@ -37,15 +37,6 @@ object TokenCountLedger {
   val Root = "token_counts"
 
   private def root(storePath: String) = s"$storePath/$Root"
-
-  private def requireName(name: String): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"batch name '$name' must be [A-Za-z0-9_]+ — it becomes a directory name")
-    require(name != "base", "batch name 'base' is reserved for the fold product")
-  }
-
-  private def freshName(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** One batch → its count rows (gram, a, b, cnt): the unigram table and
     * the within-document bigram table of `Profiling.entropyReport`, in
@@ -70,45 +61,29 @@ object TokenCountLedger {
 
   /** Initialize the ledger from the base corpus (version 0). */
   def write(docs: DataFrame, storePath: String,
-            textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    Compaction.withLease(spark, storePath, "tok:write") {
-      val r = root(storePath)
-      Compaction.clearRoot(spark, r)
-      val vdir = Compaction.initDir(r)
-      cells(docs, textCol).write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, 0L)
+            textCol: String = "text"): Unit =
+    Compaction.init(docs.sparkSession, storePath, root(storePath), "tok:write") { dir =>
+      cells(docs, textCol).write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Fold one delta: one count pass over the DELTA only, marker LAST;
     * redelivery under the same name overwrites in place. */
   def append(delta: DataFrame, storePath: String,
              textCol: String = "text",
              batchName: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val name = batchName.getOrElse(freshName())
-    requireName(name)
-    Compaction.withLease(spark, storePath, s"tok:append:$name") {
-      val vdir = Compaction.currentDir(spark, root(storePath))
-      cells(delta, textCol).write.mode("overwrite").parquet(s"$vdir/batch_$name")
-      DedupStore.touch(Compaction.fs(spark, root(storePath)),
-        s"$vdir/_committed_$name")
+    val name = Compaction.batchName(batchName)
+    Compaction.append(delta.sparkSession, storePath, root(storePath),
+        s"tok:append:$name", name) { (_, dir) =>
+      cells(delta, textCol).write.mode("overwrite").parquet(dir)
     }
   }
 
+  private def fold(batches: DataFrame): DataFrame =
+    batches.groupBy(col("gram"), col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
+
   /** Folded count tables across committed batches: (gram, a, b, cnt). */
-  def counts(spark: SparkSession, storePath: String): DataFrame = {
-    val r = root(storePath)
-    val vdir = Compaction.currentDir(spark, r)
-    val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), vdir,
-      "_committed_", "batch_", None)
-    require(dirs.nonEmpty, s"no committed count batches under $vdir — write() first")
-    spark.read.parquet(dirs: _*)
-      .groupBy(col("gram"), col("a"), col("b"))
-      .agg(sum(col("cnt")).as("cnt"))
-  }
+  def counts(spark: SparkSession, storePath: String): DataFrame =
+    fold(spark.read.parquet(Compaction.served(spark, root(storePath)): _*))
 
   /** Ledger-served Zipf fit — equal to the one-shot
     * `Profiling.zipfFit(union, topK)` (exact-integer counts: identical
@@ -133,20 +108,8 @@ object TokenCountLedger {
   /** Fold committed batches into one base count grid (counts add — the
     * fold is exact; spec-gated). */
   def compact(spark: SparkSession, storePath: String): Unit =
-    Compaction.withLease(spark, storePath, "tok:compact") {
-      val r = root(storePath)
-      val cur = Compaction.currentVersion(spark, r).getOrElse(
-        throw new java.io.FileNotFoundException(s"no LATEST marker under $r"))
-      val next = cur + 1
-      val vdir = s"$r/v$next"
-      val dirs = DedupStore.committedDirs(Compaction.fs(spark, r), s"$r/v$cur",
-        "_committed_", "batch_", None)
-      spark.read.parquet(dirs: _*)
-        .groupBy(col("gram"), col("a"), col("b"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").parquet(s"$vdir/batch_base")
-      DedupStore.touch(Compaction.fs(spark, r), s"$vdir/_committed_base")
-      Compaction.commit(spark, r, next)
-      Compaction.pruneBelow(spark, r, cur)
+    Compaction.compact(spark, storePath, root(storePath), "tok:compact") { (vdir, dest) =>
+      fold(spark.read.parquet(Compaction.committed(spark, vdir): _*))
+        .write.mode("overwrite").parquet(dest)
     }
 }

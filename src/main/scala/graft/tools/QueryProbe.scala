@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev probe: run one SparkEntry query with a stage listener and print
@@ -14,26 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   *   env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as usual. */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
-    graft.core.Scratch.pinTmpdir()
     val name = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // bound the SQL-listener plan strings: deep cached funnels print
-      // nested InMemoryRelation subtrees multiplicatively, and an
-      // unbounded explainString can dominate driver time (or overflow
-      // the heap) on every action of a complex query
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus, cpus)
     case class St(name: String, details: String, ms: Long, tasks: Int,
                   shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
                   inputMb: Double, outRows: Long)

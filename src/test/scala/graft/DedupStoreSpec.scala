@@ -78,4 +78,23 @@ class DedupStoreSpec extends SparkSpec {
     assert(plan.contains(deltaPath), "delta dedup plan should read the delta")
     kept.count() shouldBe 1L
   }
+
+  test("deltaId 'base' is rejected — it would overwrite the base signatures") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dstore_base").toString
+    val store = s"$dir/store"
+    DedupStore.write(baseDocs, N, Perms, store)
+    DedupStore.dedupDelta(
+      Seq((13L, "red green blue cyan magenta yellow black white")).toDF("doc_id", "text"),
+      store, N, Perms, Bds, T).count() shouldBe 1L
+    def ids = DedupStore.signatures(spark, store)
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq
+    ids shouldBe Seq(2L, 4L, 13L)
+    // an exact copy of base doc 2 under the reserved name would exclude
+    // batch_base from its own view (so the copy survives) and overwrite it
+    an[IllegalArgumentException] should be thrownBy
+      DedupStore.dedupDelta(
+        Seq((11L, "alpha beta gamma delta alpha beta gamma delta")).toDF("doc_id", "text"),
+        store, N, Perms, Bds, T, deltaId = Some("base"))
+    ids shouldBe Seq(2L, 4L, 13L)
+  }
 }

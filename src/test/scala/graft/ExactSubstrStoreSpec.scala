@@ -124,4 +124,19 @@ class ExactSubstrStoreSpec extends SparkSpec {
     assert(plan.contains(deltaPath), "delta fold plan should read the delta")
     kept.count() shouldBe 1L
   }
+
+  test("deltaId 'base' is rejected — it would overwrite the base window hashes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sstore_base").toString
+    val store = s"$dir/store"
+    ExactSubstrStore.write(baseDocs, L, store)
+    ExactSubstrStore.dedupDelta(
+      Seq((11L, "novel tokens one two three four")).toDF("doc_id", "text"), store, L).count()
+    def hashes = ExactSubstrStore.hashes(spark, store)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val before = hashes
+    an[IllegalArgumentException] should be thrownBy
+      ExactSubstrStore.dedupDelta(
+        Seq((13L, "x y z w")).toDF("doc_id", "text"), store, L, deltaId = Some("base"))
+    hashes shouldBe before
+  }
 }

@@ -248,6 +248,23 @@ class StoreAtomicitySpec extends SparkSpec {
           AnnStore.writeIvf(base, cents, r); r }, queries, 2, 3))
   }
 
+  test("ANN append: the reserved batch name 'base' is rejected, not silently dropped") {
+    val all = annCorpus(59, 24)
+    val base = all.where(col("vec_id") % 4 =!= 0)
+    val delta = all.where(col("vec_id") % 4 === 0)
+    val store = java.nio.file.Files.createTempDirectory("graft_annatom5").toString
+    AnnStore.writeSrp(base, graft.operators.SimilaritySearch.hyperplanes(4, 8), store)
+    AnnStore.writeIvf(base, graft.operators.SimilaritySearch.ivfCentroids(base, 5), store)
+    // the base batch's marker exists, so an append under 'base' would be
+    // taken for a redelivery and its rows dropped
+    an[IllegalArgumentException] should be thrownBy
+      AnnStore.appendSrp(delta, store, batchName = Some("base"))
+    an[IllegalArgumentException] should be thrownBy
+      AnnStore.appendIvf(delta, store, batchName = Some("base"))
+    batchDirsOf(s"$store/${AnnStore.SrpBuckets}") shouldBe Seq("batch_base")
+    batchDirsOf(s"$store/${AnnStore.IvfLists}") shouldBe Seq("batch_base")
+  }
+
   test("writer lease: a second writer fails loudly naming the holder; breakLease recovers") {
     val all = annCorpus(53, 24)
     val planes = graft.operators.SimilaritySearch.hyperplanes(4, 8)
