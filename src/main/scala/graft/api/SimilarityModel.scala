@@ -52,17 +52,18 @@ object SimilarityModel {
   }
 
   /** Serving handle over a persisted store (EP-3). The handle reads the
-    * store as it is when first used: its first `retrieve` collects the
-    * dictionary once and ships it to the executors (a Spark broadcast,
-    * `Serving.ItemDictionary`); every `retrieve` after that is one Spark
-    * job over `similar_items` alone. Open a new handle to serve a
-    * rewritten store. */
+    * store as it is when first used: its first `retrieve` lists the pair
+    * files, reads their footers and collects the dictionary into a driver
+    * map (`Serving.PointLookup`); every `retrieve` after that reads the
+    * item's rows on the driver with parquet's page index and runs no Spark
+    * job. `retrieve` reads when called, not at the DataFrame's action.
+    * Open a new handle to serve a rewritten store. */
   final case class Store(spark: SparkSession, path: String) {
     private lazy val sim = SimilarityStore.readSimilarItems(spark, path)
     private lazy val dict = SimilarityStore.readCorrelatedItems(spark, path)
-    private lazy val keys = Serving.itemDictionary(dict)
+    private lazy val lookup = new Serving.PointLookup(spark, path)
     def retrieve(itemId: Long, limit: Option[Int] = None): DataFrame =
-      Serving.retrieveSimilarItems(sim, keys, itemId, limit)
+      lookup.retrieve(itemId, limit)
     def itemInfo(ids: Seq[Long]): DataFrame = Serving.getItemInfo(dict, ids)
     def search(term: String, limit: Int = 10): DataFrame =
       Serving.searchItemsByName(dict, term, limit)

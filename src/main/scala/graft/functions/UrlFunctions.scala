@@ -54,7 +54,8 @@ object UrlFunctions {
     val rest = regexp_extract(noFrag, "^(?:[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)?(.*)$", 1)
     val path = regexp_extract(rest, "^([^?]*)", 1)
     val qstr = regexp_extract(rest, "\\?(.*)$", 1)
-    val pathNorm0 = rtrim(regexp_replace(path, "/{2,}", "/"), "/")
+    // strip trailing slashes (`\z`: unlike `$`, never before a final newline)
+    val pathNorm0 = regexp_replace(regexp_replace(path, "/{2,}", "/"), "/+\\z", "")
     val pathNorm = when(pathNorm0 === "", lit("/")).otherwise(pathNorm0)
     val kept = array_sort(filter(split(qstr, "&"),
       p => p =!= "" && !p.rlike(TrackingParam)))

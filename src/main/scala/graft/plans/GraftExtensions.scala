@@ -8,17 +8,13 @@ import graft.expressions.{RollingFingerprint, UnicodeNormalize, VecDot}
 /**
  * SparkSessionExtensions entry point: registers the engine's native
  * expressions with the Catalyst function registry so they are callable
- * from SQL as well as the Column API, and the engine's optimizer and
- * physical-plan rules.
+ * from SQL as well as the Column API, and the engine's optimizer rule.
  *
  * Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
  * (all of this project's session builders do), then:
  *   SELECT vec_dot(a.embedding, b.embedding) FROM ...
  * and any `p >= lo AND p < hi` inner join plans as a bucket-decomposed
- * equi join instead of a nested loop ([[IntervalJoinRewrite]]), and a
- * file-scan filter's integral literals are bound as generated-code
- * parameters, so a point lookup compiles once per plan shape, not once
- * per id ([[BindScanFilterLiterals]]).
+ * equi join instead of a nested loop ([[IntervalJoinRewrite]]).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -35,6 +31,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[UnicodeNormalize].getName, "nfc"),
       (children: Seq[Expression]) => UnicodeNormalize(children.head)))
     ext.injectOptimizerRule(_ => IntervalJoinRewrite)
-    ext.injectColumnar(_ => BindScanFilterLiterals.Columnar)
   }
 }

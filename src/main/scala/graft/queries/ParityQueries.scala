@@ -314,14 +314,20 @@ object ParityQueries extends QueryPack {
         .select(col("item_a"), col("item_b"), round(col("corr"), 6).as("corr"))
         .orderBy(col("item_a"), col("corr").desc_nulls_last, col("item_b"))),
 
-    // EP-3 serving: point lookup + broadcast dictionary probe + top-10 (OP-14/16/24/26).
-    "q10_serve_retrieve" -> ((s, dir) =>
-      Serving.retrieveSimilarItems(
-          storePairs(s, dir, col("item") === ProbeItem),
-          Serving.itemDictionary(Tables.dictionary(s, dir)), ProbeItem, None)
+    // EP-3 serving: the probe item's thresholded neighbors and the
+    // dictionary written as a store, then one point lookup through a
+    // serving handle — answered on the driver — and its top-10
+    // (OP-14/16/24/26).
+    "q10_serve_retrieve" -> ((s, dir) => {
+      val out = graft.core.Scratch.dir("graft_serve")
+      graft.store.SimilarityStore.writeCorrelatedItems(Tables.dictionary(s, dir), out)
+      graft.store.SimilarityStore.writeSimilarItems(
+        storePairs(s, dir, col("item") === ProbeItem), out)
+      graft.api.SimilarityModel.Store(s, out).retrieve(ProbeItem, None)
         .select(col("item_b_id"), col("key"), round(col("scaled_score"), 6).as("scaled_score"))
         .orderBy(col("scaled_score").desc_nulls_last, col("item_b_id"))
-        .limit(10)),
+        .limit(10)
+    }),
 
     // OP-13/25/29: case-insensitive contains search, ordered, limited.
     "q11_search_items" -> ((s, dir) =>

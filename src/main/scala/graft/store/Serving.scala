@@ -2,72 +2,144 @@ package graft.store
 
 import java.util.Locale
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /**
  * Serving reads over the similarity store (SURVEY §2: OP-13..17, OP-22/23,
  * OP-25, OP-29, OP-31; reference `/root/reference/propius/data.py:217-359`).
  *
- * Each read is a declarative plan Catalyst compiles to the index-like shape
- * the reference gets from SQLite: a parquet scan pruned by the pushed
- * `item_a_id = ?` for the point lookup, and TakeOrderedAndProject for
- * ORDER BY … LIMIT (true distributed top-k — never a full sort). The pair
- * table is hash-partitioned by item id and sorted within each file, so
- * min/max statistics skip whole row groups once a file has several. A
- * small store (about 71 k pairs, where AQE coalesces the write to one
- * partition) is one file with one row group, and there parquet's page
- * index does the pruning: a lookup reads the page holding its id, about
- * 19 k rows, to return about 10. The point lookup attaches keys from an [[ItemDictionary]] shipped to
- * the executors once per serving handle, so a lookup is one Spark job:
- * pruned scan → key probe → top-k, with no join, no dictionary scan and no
- * exchange. Like a prepared statement, the lookup compiles once per
- * handle: the id reaches the generated code as a bound parameter
- * (`graft.plans.BindScanFilterLiterals`), so every later lookup, whatever
- * its id, reuses the compiled classes from Spark's codegen cache.
+ * The point lookup is answered on the driver, as the reference answers it
+ * with one SQLite index probe: a [[PointLookup]] holds the footers of the
+ * store's pair files and the item dictionary, and reads one item's rows
+ * with parquet's own reader. Row-group min/max statistics and the page
+ * index (the pair table is sorted by item id within each file) skip every
+ * row group and page that cannot hold the id; the rows read are joined to
+ * the dictionary, ordered and limited in driver memory and returned as a
+ * local DataFrame, whose `collect()` runs no Spark job.
+ *
+ * The other reads are declarative plans over the store's DataFrames:
+ * IN-list and contains filters, TakeOrderedAndProject for ORDER BY … LIMIT
+ * (true distributed top-k — never a full sort) and grouped counts.
  */
 object Serving {
 
-  /**
-   * The item dictionary as a serving value: `correlated_items`' (id, key)
-   * rows collected once on the driver and held in a broadcast variable,
-   * so every lookup that uses it probes a map instead of re-scanning and
-   * re-broadcasting the dictionary. Keys are kept as a list per id so the
-   * probe has the inner join's semantics: an id absent from the dictionary
-   * drops its neighbor rows, a NULL key is kept, a duplicated id repeats
-   * them. Catalog-sized, like the broadcast side of the join it replaces;
-   * the broadcast is released when the value is garbage-collected.
-   */
-  final class ItemDictionary private[Serving] (private[Serving] val keysOf: UserDefinedFunction)
+  /** The schema `retrieve` answers in (the reference's SELECT list). */
+  private val NeighborSchema = StructType(Seq(StructField("item_b_id", LongType),
+    StructField("key", StringType), StructField("scaled_score", DoubleType)))
 
-  /** Collect `correlatedItems`' (id, key) rows into an [[ItemDictionary]]
-    * (one Spark job). NULL ids are dropped: they never equal a neighbor. */
-  def itemDictionary(correlatedItems: DataFrame): ItemDictionary = {
-    val rows = correlatedItems.where(col("id").isNotNull)
-      .select(col("id").cast("long"), col("key").cast("string")).collect()
-    val keys = correlatedItems.sparkSession.sparkContext.broadcast(
-      rows.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) })
-    val none = Array.empty[String]
-    new ItemDictionary(udf((id: Long) => keys.value.getOrElse(id, none)))
+  /** `ORDER BY scaled_score DESC, item_b_id` over answer rows, in Spark's
+    * order: NULL scores last, NaN above every number, −0.0 equal to 0.0. */
+  private val NeighborOrder: Ordering[Row] = (x, y) => {
+    val byScore = (x.isNullAt(2), y.isNullAt(2)) match {
+      case (false, false) =>
+        java.lang.Double.compare(y.getDouble(2) + 0.0, x.getDouble(2) + 0.0) // −0.0 + 0.0 is 0.0
+      case (xNull, yNull) => java.lang.Boolean.compare(xNull, yNull)
+    }
+    if (byScore != 0) byScore else java.lang.Long.compare(x.getLong(0), y.getLong(0))
   }
 
+  private val ItemA = FilterApi.longColumn("item_a_id")
+
   /**
-   * EP-3 `retrieve_similar_items` (`data.py:217-250`): neighbors of one
-   * item with names attached, best first.
-   * SQL shape: `SELECT si.item_b_id, ci.key, si.scaled_score FROM
-   * similar_items si JOIN correlated_items ci ON si.item_b_id = ci.id
-   * WHERE si.item_a_id = ? ORDER BY scaled_score DESC [LIMIT n]`, with the
-   * join answered by `dictionary` (same rows, same schema).
+   * A persisted store's point-lookup index on the driver, made once per
+   * serving handle: the data files of `similar_items` with their parquet
+   * footers, and the item dictionary as a map `id → keys` (one Spark job
+   * to collect it). Keys are kept as a list per id so the probe has the
+   * inner join's semantics: an id absent from the dictionary drops its
+   * neighbor rows, a NULL key is kept, a duplicated id repeats them, and
+   * NULL ids are dropped (they never equal a neighbor). Catalog-sized,
+   * like the broadcast side of the join it replaces. The index sees the
+   * store as it was when it was made.
    */
-  def retrieveSimilarItems(similarItems: DataFrame, dictionary: ItemDictionary,
-                           itemId: Long, limit: Option[Int] = None): DataFrame = {
-    val named = similarItems
-      .where(col("item_a_id") === lit(itemId)) // OP-14: pruned point lookup
-      .select(col("item_b_id"), // OP-16: one output row per dictionary key
-        explode(dictionary.keysOf(col("item_b_id"))).as("key"), col("scaled_score"))
-      .orderBy(col("scaled_score").desc, col("item_b_id").asc) // OP-24
-    limit.map(named.limit).getOrElse(named) // OP-26
+  final class PointLookup private[graft] (spark: SparkSession, storePath: String) {
+    private val conf = spark.sparkContext.hadoopConfiguration
+
+    private val files: Seq[(HadoopInputFile, ParquetMetadata)] = {
+      val dir = new Path(s"$storePath/${SimilarityStore.SimilarItems}")
+      dir.getFileSystem(conf).listStatus(dir).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".")) // Spark's data-file rule
+        .map { f =>
+          val in = HadoopInputFile.fromStatus(f, conf)
+          in -> Using.resource(ParquetFileReader.open(in))(_.getFooter)
+        }
+    }
+
+    private val keys: Map[Long, Array[String]] =
+      SimilarityStore.readCorrelatedItems(spark, storePath).where(col("id").isNotNull)
+        .select(col("id").cast("long"), col("key").cast("string")).collect()
+        .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) }
+
+    /**
+     * EP-3 `retrieve_similar_items` (`data.py:217-250`): neighbors of one
+     * item with names attached, best first, as `SELECT si.item_b_id,
+     * ci.key, si.scaled_score FROM similar_items si JOIN correlated_items
+     * ci ON si.item_b_id = ci.id WHERE si.item_a_id = ? ORDER BY
+     * scaled_score DESC, item_b_id [LIMIT n]` answers it. The rows are read
+     * when this is called, not at the returned DataFrame's action.
+     */
+    def retrieve(itemId: Long, limit: Option[Int] = None): DataFrame = {
+      require(limit.forall(_ >= 0), s"limit must be non-negative, got ${limit.get}")
+      val options = HadoopReadOptions.builder(conf)
+        .withRecordFilter(FilterCompat.get(FilterApi.eq(ItemA, java.lang.Long.valueOf(itemId))))
+        .build()
+      val rows = mutable.ArrayBuffer.empty[Row]
+      for ((file, footer) <- files) Using.Manager { use =>
+        val reader = use(ParquetFileReader.open(file, footer, options, use(file.newStream())))
+        val schema = footer.getFileMetaData.getSchema
+        val columns = new MessageType(schema.getName, Seq("item_a_id", "item_b_id", "scaled_score")
+          .map(c => schema.getType(schema.getFieldIndex(c))).asJava)
+        reader.setRequestedSchema(columns)
+        var group = reader.readNextFilteredRowGroup() // OP-14: pruned point lookup
+        while (group != null) {
+          val store = new ColumnReadStoreImpl(group, new GroupRecordConverter(columns).getRootConverter,
+            columns, footer.getFileMetaData.getCreatedBy)
+          val Seq(a, b, s) = columns.getColumns.asScala.toSeq.map(c => store.getColumnReader(c))
+          var n = group.getRowCount
+          while (n > 0) {
+            if (present(a) && a.getLong == itemId && present(b)) {
+              val neighbor = b.getLong
+              val score = if (present(s)) s.getDouble else null
+              // OP-16: one output row per dictionary key
+              keys.getOrElse(neighbor, NoKeys).foreach(k => rows += Row(neighbor, k, score))
+            }
+            next(a); next(b); next(s)
+            n -= 1
+          }
+          group = reader.readNextFilteredRowGroup()
+        }
+      }.get
+      val ordered = rows.sorted(NeighborOrder) // OP-24
+      spark.createDataFrame(limit.fold(ordered)(ordered.take).asJava, NeighborSchema) // OP-26
+    }
+  }
+
+  private val NoKeys = Array.empty[String]
+
+  private def present(c: ColumnReader): Boolean =
+    c.getCurrentDefinitionLevel == c.getDescriptor.getMaxDefinitionLevel
+
+  /** Move to the next row, skipping a value that was not read. */
+  private def next(c: ColumnReader): Unit = {
+    if (present(c)) c.skip()
+    c.consume()
   }
 
   /** `get_item_info` (`data.py:253-278`): dictionary rows for an id set

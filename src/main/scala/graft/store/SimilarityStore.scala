@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
  *
  * Spark-first: both tables are parquet directories written in ONE bulk job
  * each. The SQLite unique indexes become physical layout: `similar_items`
- * is repartitioned and sorted by item_a_id so parquet row-group min/max
- * statistics prune point lookups (the index-like access path, SURVEY §4);
- * at warehouse scale the same call writes bucketed tables. "DDL" is
- * `mode("overwrite")`.
+ * is repartitioned by item_a_id and sorted within each file, so a point
+ * lookup's `item_a_id = ?` skips row groups by their min/max statistics
+ * and pages by the column index (the index-like access path, SURVEY §4;
+ * `Serving.PointLookup` reads it on the driver); at warehouse scale the
+ * same call writes bucketed tables. "DDL" is `mode("overwrite")`.
  */
 object SimilarityStore {
 
@@ -32,7 +33,8 @@ object SimilarityStore {
       .write.mode("overwrite").parquet(s"$storePath/$CorrelatedItems")
 
   /** OP-06+08: write the thresholded pair table, laid out for per-item
-    * point lookups (sorted within files by item_a_id → row-group pruning). */
+    * point lookups (sorted within files by item_a_id → row-group and page
+    * pruning). */
   def writeSimilarItems(pairs: DataFrame, storePath: String): Unit =
     pairs.select(col("item_a_id").cast("long"),
         col("item_b_id").cast("long"), col("scaled_score").cast("double"))

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.SimilarityModel
 import graft.core.{Correlation, Crosstab, Neighbors}
-import graft.store.{Serving, SimilarityStore}
+import graft.store.SimilarityStore
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -24,47 +24,48 @@ class PlanShapeSpec extends SparkSpec {
     p should include("WindowGroupLimit")
   }
 
-  test("serving point lookup is one pushed-down scan and a top-k, with no exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lookup").toString
-    Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 3L, 0.7))
-      .toDF("item_a_id", "item_b_id", "scaled_score").write.mode("overwrite").parquet(dir)
-    val dict = Serving.itemDictionary(Seq((2L, "a", null: String), (3L, "b", null: String))
-      .toDF("id", "key", "human_label"))
-    // limit must be below the fixture's row count or EliminateLimits
-    // removes it from the logical plan entirely
-    val p = planOf(Serving.retrieveSimilarItems(spark.read.parquet(dir), dict, 1L, Some(1)))
-    p should include("FileScan parquet")
-    "Scan".r.findAllIn(p).length shouldBe 1
-    "PushedFilters: \\[[^\\]]*EqualTo\\(item_a_id,1\\)".r.findFirstIn(p) should not be empty
-    p should include("TakeOrderedAndProject")
-    p should not include "BroadcastExchange"
-    p should not include "Exchange"
-  }
-
-  test("after a handle's first lookup, a lookup with another id compiles no generated class") {
+  test("after a handle's first retrieve, a lookup runs no job and compiles no class") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val dir = java.nio.file.Files.createTempDirectory("graft-lookup-codegen").toString
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-lookup-local").toString
     SimilarityStore.writeSimilarItems(Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 3L, 0.7),
       (2L, 1L, 0.6), (3L, 1L, 0.5)).toDF("item_a_id", "item_b_id", "scaled_score"), dir)
     SimilarityStore.writeCorrelatedItems(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "key"), dir)
     val store = SimilarityModel.Store(spark, dir)
-    // the reference reads local copies, which no file-scan rule rewrites
-    def local(df: DataFrame) = spark.createDataFrame(df.collectAsList(), df.schema)
-    val sim = local(SimilarityStore.readSimilarItems(spark, dir))
-    val dict = local(SimilarityStore.readCorrelatedItems(spark, dir))
+    val sim = SimilarityStore.readSimilarItems(spark, dir)
+    val dict = SimilarityStore.readCorrelatedItems(spark, dir)
     val rowOrder = Ordering.by((r: Row) => (r.getLong(0), Option(r.getString(1)), r.getDouble(2)))
-    store.retrieve(1L, Some(10)).collect() // warm-up: compiles the lookup's classes
-    for (id <- Seq(2L, 3L, 42L)) withClue(s"item $id: ") {
-      val lookup = store.retrieve(id, Some(10))
-      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val rows = lookup.collect().toSeq
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled shouldBe 0L
-      s"PushedFilters: \\[[^\\]]*EqualTo\\(item_a_id,$id\\)".r
-        .findFirstIn(planOf(lookup)) should not be empty
-      rows.sorted(rowOrder) shouldBe StoreRoundTripSpec.joinRetrieve(sim, dict, id, Some(10))
-        .collect().toSeq.sorted(rowOrder)
+    // the job group of every job start; a marker job submitted after the
+    // lookup arrives after the lookup's own jobs (the listener bus keeps
+    // order), so once it is seen every lookup job has been counted
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
     }
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      store.retrieve(1L, Some(10)).collect() // first use: lists files, reads footers and the dictionary
+      for (id <- Seq(2L, 3L, 42L)) withClue(s"item $id: ") {
+        val expected = StoreRoundTripSpec.joinRetrieve(sim, dict, id, Some(10))
+          .collect().toSeq.sorted(rowOrder)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val rows = inGroup(s"lookup-$id")(store.retrieve(id, Some(10)).collect().toSeq)
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled shouldBe 0L
+        inGroup(s"marker-$id")(sc.parallelize(Seq(1), 1).count())
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains(s"marker-$id") && System.nanoTime() < deadline) Thread.sleep(10)
+        groups should contain(s"marker-$id")
+        groups.toArray.count(_ == s"lookup-$id") shouldBe 0
+        rows.sorted(rowOrder) shouldBe expected
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("parquet point-lookup filter reaches the scan (PushedFilters)") {

@@ -28,6 +28,10 @@ class StoreRoundTripSpec extends SparkSpec {
   import spark.implicits._
   import StoreRoundTripSpec.joinRetrieve
 
+  /** A total order for comparing answers as multisets (NULL- and NaN-safe). */
+  private val rowOrder = Ordering.by((r: Row) =>
+    (r.getLong(0), Option(r.getString(1)), Option(r.get(2)).map(_.toString)))
+
   test("fit → storeIn → retrieve round-trip preserves thresholded neighbors") {
     val dir = Files.createTempDirectory("graft-store").toString
     val occ = Tables10.occ.toDF("item_id", "reference_id")
@@ -63,11 +67,19 @@ class StoreRoundTripSpec extends SparkSpec {
 
   test("retrieve keeps the inner-join contract of the dictionary join") {
     val dir = Files.createTempDirectory("graft-retrieve").toString
-    SimilarityStore.writeSimilarItems(Seq(
+    SimilarityStore.writeSimilarItems(Seq[(java.lang.Long, java.lang.Long, java.lang.Double)](
       (1L, 2L, 0.9), (1L, 5L, 0.7), (1L, 7L, 0.6), (1L, 3L, 0.5), (1L, 4L, 0.5),
       (1L, 6L, 0.3), (1L, 8L, 0.1),
       (2L, 3L, 0.8), (2L, 1L, 0.8),
-      (9L, 5L, 1.0)).toDF("item_a_id", "item_b_id", "scaled_score"), dir)
+      // NaN sorts first, −0.0 ties 0.0, a NULL score sorts last and a NULL
+      // neighbor matches nothing
+      (3L, 8L, 0.0), (3L, 4L, -0.0), (3L, 6L, null), (3L, 2L, Double.NaN), (3L, null, 0.7),
+      (3L, 1L, 0.5),
+      (9L, 5L, 1.0),
+      (10L, 1L, 0.4), (10L, 4L, 0.2)).toDF("item_a_id", "item_b_id", "scaled_score"), dir)
+    // a second part file holds more of item 10's rows
+    Seq((10L, 2L, 0.6), (10L, 3L, 0.4)).toDF("item_a_id", "item_b_id", "scaled_score")
+      .write.mode("append").parquet(s"$dir/${SimilarityStore.SimilarItems}")
     // id 5 is missing, id 6 has a NULL key, id 7 is listed twice, and a
     // NULL id matches nothing
     SimilarityStore.writeCorrelatedItems(Seq[(java.lang.Long, String)](
@@ -76,7 +88,6 @@ class StoreRoundTripSpec extends SparkSpec {
     val store = SimilarityModel.Store(spark, dir)
     val sim = SimilarityStore.readSimilarItems(spark, dir)
     val dict = SimilarityStore.readCorrelatedItems(spark, dir)
-    val rowOrder = Ordering.by((r: Row) => (r.getLong(0), Option(r.getString(1)), r.getDouble(2)))
 
     val cases = Table(("case", "item", "limit", "item_b_ids in served order"),
       ("absent item id", 42L, None, Nil),
@@ -84,12 +95,18 @@ class StoreRoundTripSpec extends SparkSpec {
       ("only neighbor missing from the dictionary", 9L, None, Nil),
       ("missing neighbor dropped, NULL key kept, duplicate repeated", 1L, None,
         Seq(2L, 7L, 7L, 3L, 4L, 6L, 8L)),
+      ("limit 0", 1L, Some(0), Nil),
       ("limit 1", 1L, Some(1), Seq(2L)),
       ("limit cuts a score tie by item_b_id", 1L, Some(4), Seq(2L, 7L, 7L, 3L)),
       ("limit above the row count", 1L, Some(10), Seq(2L, 7L, 7L, 3L, 4L, 6L, 8L)),
       ("tied scores order by item_b_id", 2L, None, Seq(1L, 3L)),
       ("tied scores, limit 1", 2L, Some(1), Seq(1L)),
-      ("tied scores, limit 10", 2L, Some(10), Seq(1L, 3L)))
+      ("tied scores, limit 10", 2L, Some(10), Seq(1L, 3L)),
+      ("NaN first, −0.0 ties 0.0 by item_b_id, NULL score last, NULL neighbor dropped", 3L, None,
+        Seq(2L, 1L, 4L, 8L, 6L)),
+      ("limit cuts the −0.0 / 0.0 tie", 3L, Some(3), Seq(2L, 1L, 4L)),
+      ("rows in two part files", 10L, None, Seq(2L, 1L, 3L, 4L)),
+      ("limit across two part files", 10L, Some(2), Seq(2L, 1L)))
 
     forAll(cases) { (what, item, limit, ids) =>
       withClue(s"$what: ") {
@@ -98,12 +115,29 @@ class StoreRoundTripSpec extends SparkSpec {
         served.schema shouldBe reference.schema
         val rows = served.collect().toSeq
         rows.map(_.getLong(0)) shouldBe ids
-        rows.sorted(rowOrder) shouldBe reference.collect().toSeq.sorted(rowOrder)
+        val expected = reference.collect().toSeq
+        expected.map(_.getLong(0)) shouldBe ids
+        rows.sorted(rowOrder) shouldBe expected.sorted(rowOrder)
       }
     }
     store.retrieve(1L).collect().map(r => (r.getLong(0), r.getString(1)))
       .filter(_._1 >= 6L).sortBy(r => (r._1, Option(r._2))).toSeq shouldBe
       Seq((6L, null), (7L, "g1"), (7L, "g2"), (8L, "h"))
+    an[IllegalArgumentException] should be thrownBy store.retrieve(1L, Some(-1))
+
+    val emptyDir = Files.createTempDirectory("graft-retrieve-empty").toString
+    SimilarityStore.writeSimilarItems(
+      Seq.empty[(Long, Long, Double)].toDF("item_a_id", "item_b_id", "scaled_score"), emptyDir)
+    SimilarityStore.writeCorrelatedItems(Seq((1L, "a")).toDF("id", "key"), emptyDir)
+    val emptyStore = SimilarityModel.Store(spark, emptyDir)
+    for (limit <- Seq(None, Some(0), Some(10))) withClue(s"empty similar_items, limit $limit: ") {
+      val served = emptyStore.retrieve(1L, limit)
+      val reference = joinRetrieve(SimilarityStore.readSimilarItems(spark, emptyDir),
+        SimilarityStore.readCorrelatedItems(spark, emptyDir), 1L, limit)
+      served.schema shouldBe reference.schema
+      served.collect() shouldBe empty
+      reference.collect() shouldBe empty
+    }
   }
 
   test("search and the blocklist fold case the same under a Turkish locale") {
