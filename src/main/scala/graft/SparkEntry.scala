@@ -7,7 +7,7 @@ import graft.queries._
   * Queries are contributed by packs under `graft.queries`. */
 object SparkEntry {
 
-  private val packs: Seq[QueryPack] = Seq(
+  private[graft] val packs: Seq[QueryPack] = Seq(
     ParityQueries,
     TextQueries,
     DedupQueries,

@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
-import graft.core.StoreBuild
 import graft.store.SimilarityStore
 
 /**
@@ -33,9 +32,9 @@ object Legacy {
     model.storeAllIn(storePath, dictionary)
 
   /** `ModelStorer` (`data.py:388-398`): prepare / populate_correlated_items /
-    * populate_similar_items, step by step. `populateSimilarItems` uses the
-    * closed-form all-items build — the reference's all-items loop without
-    * the I×I cliff. */
+    * populate_similar_items, step by step. `populateSimilarItems` writes
+    * the same table as `storeAllIn` — the reference's all-items loop
+    * without the I×I cliff. */
   @deprecated("Use SimilarityModel.storeIn / storeAllIn", "0.1.0")
   final class ModelStorer(model: SimilarityModel, dictionary: DataFrame,
                           storePath: String) {
@@ -43,7 +42,6 @@ object Legacy {
     def populateCorrelatedItems(): Unit =
       SimilarityStore.writeCorrelatedItems(dictionary, storePath)
     def populateSimilarItems(): Unit =
-      SimilarityStore.writeSimilarItems(
-        StoreBuild.scaledNeighbors(model.crosstab), storePath)
+      SimilarityStore.writeSimilarItems(model.storeTable(2.0, None), storePath)
   }
 }

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.core.{Correlation, Crosstab, Neighbors}
+import graft.core.{Correlation, Crosstab, Neighbors, StoreBuild}
 import graft.store.{Serving, SimilarityStore}
 
 /**
@@ -99,14 +99,12 @@ final class SimilarityModel private (
 
   /** `store_similarities_in_database` (EP-2, `data.py:19-41`): min-max
     * scale + mean+k·σ threshold per item, one bulk write of both tables.
-    * `itemPredicate` bounds the full-matrix pass (lit(true) on small
-    * catalogs; at scale pass the partition of items being refreshed). */
+    * `itemPredicate` (over column `item`) selects the items whose rows are
+    * stored; each still scales and thresholds against its complete vector,
+    * and the I×I matrix is never materialized (see `core.StoreBuild`). */
   def storeIn(path: String, dictionary: DataFrame,
-              itemPredicate: Column = lit(true), k: Double = 2.0): Unit = {
-    SimilarityStore.writeCorrelatedItems(dictionary, path)
-    val thresholded = Neighbors.scaledStdDevThreshold(fullPairs(itemPredicate), k)
-    SimilarityStore.writeSimilarItems(thresholded, path)
-  }
+              itemPredicate: Column = lit(true), k: Double = 2.0): Unit =
+    writeStore(path, dictionary, k, Some(itemPredicate))
 
   /** `storeIn` with a JDBC destination instead of the parquet layout —
     * the reference's literal SQLite sink shape (`data.py:44-87` tables +
@@ -115,23 +113,29 @@ final class SimilarityModel private (
                   itemPredicate: Column = lit(true), k: Double = 2.0,
                   props: java.util.Properties = new java.util.Properties): Unit =
     graft.store.JdbcStore.storeIn(dictionary,
-      Neighbors.scaledStdDevThreshold(fullPairs(itemPredicate), k), url, props)
+      storeTable(k, Some(itemPredicate)), url, props)
 
   /** All-items EP-2 (`populate_similar_items` over the FULL catalog,
-    * `data.py:116-149`) via the closed-form zero-pair decomposition —
-    * identical output to `storeIn(path, dict, lit(true))` but never
-    * materializes the I×I matrix (see `core.StoreBuild`). The production
+    * `data.py:116-149`): `storeIn` without a selection. The production
     * full-catalog build. */
-  def storeAllIn(path: String, dictionary: DataFrame, k: Double = 2.0): Unit = {
+  def storeAllIn(path: String, dictionary: DataFrame, k: Double = 2.0): Unit =
+    writeStore(path, dictionary, k, None)
+
+  private def writeStore(path: String, dictionary: DataFrame, k: Double,
+                         itemPredicate: Option[Column]): Unit = {
     SimilarityStore.writeCorrelatedItems(dictionary, path)
-    // A model resumed from a statistics snapshot refreshes the store from
-    // the persisted summaries — no co-moment recompute (q57-gated).
-    val thresholded = precomputed match {
-      case Some(st) => graft.core.StoreBuild.scaledNeighborsFromStats(st, k)
-      case None => graft.core.StoreBuild.scaledNeighbors(crosstab, k)
-    }
-    SimilarityStore.writeSimilarItems(thresholded, path)
+    SimilarityStore.writeSimilarItems(storeTable(k, itemPredicate), path)
   }
+
+  /** The thresholded store table (item_a_id, item_b_id, scaled_score) that
+    * every EP-2 face writes, built by `core.StoreBuild`. A model resumed
+    * from a statistics snapshot builds the unrestricted table from the
+    * persisted summaries — no co-moment recompute (q57-gated). */
+  private[api] def storeTable(k: Double, itemPredicate: Option[Column]): DataFrame =
+    (precomputed, itemPredicate) match {
+      case (Some(st), None) => StoreBuild.scaledNeighborsFromStats(st, k)
+      case _ => StoreBuild.scaledNeighbors(crosstab, k, itemPredicate)
+    }
 
   /** `save_correlation_matrix` parity (OP-04) — long-form pairs, CSV. */
   def save(path: String): Unit =

@@ -29,6 +29,12 @@ import org.apache.spark.sql.functions._
  * (including never-co-occurring pairs, which the reference's dense path
  * emits with small negative correlations) is only produced by `fullPairs`,
  * which requires an item predicate to bound the I×I blow-up (SURVEY §7.4.10).
+ *
+ * There is one co-moment layout (the ctx self-join, optionally degree
+ * capped) and one Pearson expression (`corrExpr`). The pair paths are
+ * `sparsePairs` (co-occurring pairs), `fullPairs` (parity and the
+ * windowed reference the store build is tested against) and
+ * `StoreBuild`'s internal join over `sparseCoMoments`.
  */
 object Correlation {
 
@@ -61,37 +67,14 @@ object Correlation {
   }
 
   /** The Pearson expression from co-moments; zero-variance denominators →
-    * NULL (the engine's normalization of the reference's NaN, SURVEY §7.4.1). */
-  private def corrExpr(n: Column, sxy: Column, sxA: Column, sxxA: Column,
-                       sxB: Column, sxxB: Column): Column = {
+    * NULL (the engine's normalization of the reference's NaN, SURVEY §7.4.1).
+    * The one copy: `pairsFromStats`, `fullPairs` and `StoreBuild` all call
+    * it, so every path rounds identically. */
+  private[core] def corrExpr(n: Column, sxy: Column, sxA: Column, sxxA: Column,
+                             sxB: Column, sxxB: Column): Column = {
     val den = sqrt(n * sxxA - sxA * sxA) * sqrt(n * sxxB - sxB * sxB)
     when(den === 0.0 || isnan(den), lit(null).cast("double"))
       .otherwise((n * sxy - sxA * sxB) / den)
-  }
-
-  /**
-   * Skew-resistant variant of `sparseCoMoments`: salted self-join for
-   * workloads where a few hot contexts would overload single shuffle
-   * partitions (AQE skew-join splits help, but a context with 10^5 items
-   * in ONE key is beyond it). Standard replicated-salt scheme: the left
-   * side scatters each cell to one of `salts` sub-keys by item hash, the
-   * right side replicates each cell to ALL sub-keys, so every (a, b, ctx)
-   * combination meets exactly once and the final (item_a, item_b) sum is
-   * unchanged — verified pair-for-pair against the unsalted join in the
-   * spec. Costs a `salts`× blow-up of the right side; use for genuinely
-   * skewed context degree distributions, `maxContextDegree` when hot
-   * contexts carry no signal anyway.
-   */
-  def saltedCoMoments(crosstab: DataFrame, salts: Int): DataFrame = {
-    val a = crosstab.select(col("item").as("item_a"), col("ctx"), col("cnt").as("cnt_a"),
-      pmod(hash(col("item")), lit(salts)).as("salt"))
-    val b = crosstab.select(col("item").as("item_b"), col("ctx"), col("cnt").as("cnt_b"))
-      .crossJoin(broadcast(
-        crosstab.sparkSession.range(salts).select(col("id").cast("int").as("salt"))))
-    a.join(b, Seq("ctx", "salt"))
-      .where(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b")
-      .agg(sum(col("cnt_a") * col("cnt_b")).cast("double").as("sxy"))
   }
 
   /**
@@ -119,66 +102,18 @@ object Correlation {
    * Scalable path: correlations for CO-OCCURRING pairs, symmetric output
    * (both (a,b) and (b,a)), self excluded.
    */
-  def sparsePairs(crosstab0: DataFrame, maxContextDegree: Option[Int] = None,
-                  saltedWith: Option[Int] = None): DataFrame = {
+  def sparsePairs(crosstab0: DataFrame, maxContextDegree: Option[Int] = None): DataFrame = {
     // The crosstab feeds three independent aggregations (item stats,
     // pair co-moments, context count); Catalyst has no cross-branch
     // subplan reuse, so persist it — MEMORY_AND_DISK spills cleanly when
     // the cell table outgrows executor memory at scale. `cacheOnce`
     // reuses an already-cached equal plan instead of re-persisting.
     val crosstab = Caches.cacheOnce(crosstab0)
-    // The salted join computes the SAME integer-exact co-moment sums over
-    // a skew-resistant shuffle layout — oracle-identical output.
-    val co = saltedWith match {
-      case Some(salts) => saltedCoMoments(crosstab, salts)
-      case None => sparseCoMoments(crosstab, maxContextDegree)
-    }
+    val co = sparseCoMoments(crosstab, maxContextDegree)
     // Cache the RESULT too: several queries consume the same pair table
     // (raw, top-k, matrix export), and CacheManager dedups by canonical
     // plan, so they share one materialization per session.
     Caches.cacheOnce(pairsFromStats(itemStats(crosstab), co, nContexts(crosstab)))
-  }
-
-  /** Skew decision from `probeSkew`: how the co-moment self-join should
-    * be laid out for this crosstab's context-degree distribution. */
-  sealed trait SkewPlan
-  case object NoSkew extends SkewPlan
-  final case class Salted(salts: Int) extends SkewPlan
-
-  /**
-   * Cheap skew probe: estimate the hottest context degree from a
-   * deterministic hash-slice sample of the cell table and decide whether
-   * the co-moment self-join needs salting. A context of degree d appears
-   * ~d·f times in an f-fraction sample, so maxSampleDeg/f estimates the
-   * true max degree; the estimate only needs to be right about ORDER OF
-   * MAGNITUDE — both layouts produce bit-identical sums (q43), so a wrong
-   * call costs performance, never correctness. The sample is hash-sliced
-   * on (item, ctx) (content-stable, like `Sampling.stratified`) rather
-   * than seed-random, so the decision is reproducible across runs and
-   * engines. Cost: one scan of the cell-table sample — negligible next to
-   * the quadratic join it protects.
-   */
-  def probeSkew(crosstab: DataFrame, hotDegree: Int = 1000,
-                fraction: Double = 0.1, salts: Int = 8): SkewPlan = {
-    val permille = math.max(1, (fraction * 1000).toInt)
-    val sampled = crosstab.where(
-      pmod(hash(col("item"), col("ctx")), lit(1000)) < permille)
-    val maxDeg = sampled.groupBy("ctx").agg(count(lit(1)).as("deg"))
-      .agg(max(col("deg")).cast("double").as("m"))
-      .collect()(0)
-    val est = if (maxDeg.isNullAt(0)) 0.0 else maxDeg.getDouble(0) * (1000.0 / permille)
-    if (est > hotDegree) Salted(salts) else NoSkew
-  }
-
-  /** `sparsePairs` with the salting decision taken by `probeSkew` instead
-    * of a caller flag — the self-tuning entry point. */
-  def sparsePairsAuto(crosstab0: DataFrame, hotDegree: Int = 1000,
-                      salts: Int = 8): DataFrame = {
-    val crosstab = Caches.cacheOnce(crosstab0) // probe + build share one scan
-    probeSkew(crosstab, hotDegree, salts = salts) match {
-      case Salted(s) => sparsePairs(crosstab, saltedWith = Some(s))
-      case NoSkew => sparsePairs(crosstab)
-    }
   }
 
   /**

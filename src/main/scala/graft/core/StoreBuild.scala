@@ -48,7 +48,10 @@ import org.apache.spark.sql.functions._
  *
  * Emitted scores use the IDENTICAL arithmetic (term order included) as
  * `Correlation.fullPairs` + `Neighbors.scaledStdDevThreshold`, so results
- * hash-match the windowed oracle after 1e-6 rounding.
+ * hash-match the windowed oracle after 1e-6 rounding: the correlation is
+ * `Correlation.corrExpr`, the one copy both paths call. The windowed path
+ * is the reference the specs compare against; every EP-2 store, including
+ * `SimilarityModel.storeIn`'s selections, is built here.
  */
 object StoreBuild {
 
@@ -86,26 +89,15 @@ object StoreBuild {
     * sorted once on one partition for the u-rank, as the closed form
     * requires — the same ceiling as `scaledNeighbors`. */
   def scaledNeighborsFromStats(stats: Incremental.Stats, k: Double = 2.0,
-                               touched: Option[DataFrame] = None): DataFrame =
-    new Build(pinPlan(stats.items), pinPlan(stats.co), pinPlan(stats.n),
-      k, None, touched).neighbors
-
-  /** Cache a folded summary AND seal its lineage behind a leaf scan.
-    *
-    * An in-session `Incremental.update` produces summaries whose LOGICAL
-    * plans reference the base snapshot's plans several times over; a
-    * build that embeds those subtrees per consumer hands Catalyst a
-    * multi-megabyte tree to analyze on EVERY action (measured: the
-    * in-session q57 build planned 13k Exchange nodes / a 15.6 MB plan
-    * string where the same data loaded from a saved snapshot planned 95
-    * — the data was cached either way; the DRIVER was re-walking the
-    * fold's plan). The lazy local checkpoint truncates the lineage to
-    * the materialized partitions, so the build plans against three leaf
-    * scans, like the loaded-snapshot path. Local (non-reliable)
-    * checkpointing is the right tier: the summaries are cached
-    * MEMORY_AND_DISK anyway, and a lost executor re-runs the fold —
-    * durability across failures is `Incremental.save`'s job. */
-  private def pinPlan(df: DataFrame): DataFrame = Caches.pinPlan(df)
+                               touched: Option[DataFrame] = None): DataFrame = {
+    // Seal each summary's lineage behind a leaf scan: an in-session
+    // `Incremental.update` leaves summaries whose logical plans reference
+    // the base snapshot's plans many times over, and the in-session q57
+    // build planned 13 k Exchange nodes (a 15.6 MB plan string) before
+    // sealing, against 95 for the same data loaded from a saved snapshot.
+    new Build(Caches.pinPlan(stats.items), Caches.pinPlan(stats.co),
+      Caches.pinPlan(stats.n), k, None, touched).neighbors
+  }
 
   /** OP-20 at scale: per-item mean/σ of the COMPLETE correlation vector
     * (NULL-skipping, sample σ — exactly `avg`/`stddev_samp` over
@@ -173,13 +165,6 @@ object StoreBuild {
       sum(col("u")).as("gU"), sum(col("u") * col("u")).as("gV"),
       count(lit(1)).as("cntD"), min(col("u")).as("uming")))
 
-    def corrCol(sxy: Column): Column = {
-      val den = sqrt(col("n") * col("sxx_a") - col("sx_a") * col("sx_a")) *
-        sqrt(col("n") * col("sxx_b") - col("sx_b") * col("sx_b"))
-      when(den === 0.0 || isnan(den), lit(null).cast("double"))
-        .otherwise((col("n") * sxy - col("sx_a") * col("sx_b")) / den)
-    }
-
     val da = d.select(col("item").as("item_a"), col("sx").as("sx_a"),
       col("sxx").as("sxx_a"), col("u").as("u_a"))
     val db = d.select(col("item").as("item_b"), col("sx").as("sx_b"),
@@ -212,7 +197,8 @@ object StoreBuild {
       .join(broadcast(db), Seq("item_b"))
       .crossJoin(broadcast(n))
       .select(col("item_a"), col("item_b"), col("u_b"),
-        corrCol(col("sxy")).as("corr")))
+        Correlation.corrExpr(col("n"), col("sxy"), col("sx_a"), col("sxx_a"),
+          col("sx_b"), col("sxx_b")).as("corr")))
 
     // Global u-ranking of D. r is descending in u; the ascending rank of
     // the same row is cntD+1−r, so ONE ranking serves both extrema.
@@ -372,7 +358,8 @@ object StoreBuild {
             (col("isConst") ||
               (-col("u_a") * col("u_b") >= rawThr - abs(rawThr) * 1e-9 - lit(1e-12))))
           .join(sym.select(col("item_a"), col("item_b")), Seq("item_a", "item_b"), "left_anti")
-          .withColumn("corr", corrCol(lit(0.0)))
+          .withColumn("corr", Correlation.corrExpr(col("n"), lit(0.0),
+            col("sx_a"), col("sxx_a"), col("sx_b"), col("sxx_b")))
           .where(passes)
           .select(col("item_a").as("item_a_id"), col("item_b").as("item_b_id"),
             scaledScore.as("scaled_score"))

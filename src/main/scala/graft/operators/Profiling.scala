@@ -51,7 +51,8 @@ object Profiling {
 
   /**
    * Key-skew diagnosis — the measurement BEHIND every salting/AQE-skew
-   * decision (`Joins.saltedEquiJoin`, `Correlation.probeSkew`'s gate):
+   * decision (`Joins.saltedEquiJoin`, `Correlation.sparsePairs`'
+   * `maxContextDegree` cap):
    * one report row quantifying how unevenly a join/agg key distributes.
    *   - top1_share / topk_share: the hot key's (top-k keys') row share —
    *     what a single reducer would carry;

@@ -207,23 +207,6 @@ object ParityQueries extends QueryPack {
         .select(col("item_a"), col("item_b"), round(col("corr"), 6).as("corr"))
         .orderBy(col("item_a"), col("item_b"))),
 
-    // OP-19 via the AUTO-SKEW probe (EXT-C6): the engine samples the
-    // context-degree distribution and picks the co-moment layout itself.
-    // Either choice is bit-identical (q43), so the oracle is q05's SQL —
-    // this gates the auto path end-to-end, not just the decision rule.
-    "q60_corr_auto" -> ((s, dir) =>
-      Correlation.sparsePairsAuto(ct(s, dir))
-        .select(col("item_a"), col("item_b"), round(col("corr"), 6).as("corr"))
-        .orderBy(col("item_a"), col("item_b"))),
-
-    // OP-19 via the SALTED co-moment join (hot-key scatter/replicate):
-    // the co-moment sums are integer-exact, so the skew-resistant layout
-    // must reproduce q05's answer bit-for-bit — gated here.
-    "q43_corr_salted" -> ((s, dir) =>
-      Correlation.sparsePairs(ct(s, dir), saltedWith = Some(4))
-        .select(col("item_a"), col("item_b"), round(col("corr"), 6).as("corr"))
-        .orderBy(col("item_a"), col("item_b"))),
-
     // EP-1 INCREMENTAL (Incremental.update): the reference retrains from
     // scratch on every ingest (`similarity.py:92-117`); here a base model
     // over lineitem lines 1-3 is updated with lines 4+ as the delta. The
@@ -458,11 +441,6 @@ object ParityQueries extends QueryPack {
          |$SparseCte
          |SELECT item_a, item_b, ROUND(corr, 6) AS corr FROM sp ORDER BY 1, 2""".stripMargin,
 
-    "q60_corr_auto" ->
-      s"""$BaseCtes,
-         |$SparseCte
-         |SELECT item_a, item_b, ROUND(corr, 6) AS corr FROM sp ORDER BY 1, 2""".stripMargin,
-
     // The same sparse correlations through the reference's float32 .npy
     // dump: the oracle applies the identical f4 truncation (corr::REAL);
     // NULL (zero-variance) and exact-zero cells cannot survive a dense
@@ -492,11 +470,6 @@ object ParityQueries extends QueryPack {
          |  FROM cocsym c JOIN st sa ON c.item_a = sa.item
          |  JOIN st sb ON c.item_b = sb.item CROSS JOIN nn)
          |SELECT item_a, item_b, ROUND(corr, 6) AS corr FROM spc ORDER BY 1, 2""".stripMargin,
-
-    "q43_corr_salted" ->
-      s"""$BaseCtes,
-         |$SparseCte
-         |SELECT item_a, item_b, ROUND(corr, 6) AS corr FROM sp ORDER BY 1, 2""".stripMargin,
 
     "q53_incremental_corr" ->
       s"""$BaseCtes,

@@ -3,6 +3,7 @@ package graft
 import graft.api.{Legacy, SimilarityModel}
 import graft.store.SimilarityStore
 import org.apache.spark.sql.functions._
+import org.scalatest.prop.TableDrivenPropertyChecks._
 
 /** Coverage of the reference's remaining public-surface parity items:
   * the wide correlation-matrix debug view and the deprecated legacy
@@ -57,17 +58,34 @@ class ApiSurfaceSpec extends SparkSpec {
   }
 
   test("legacy ModelStorer writes the same store as storeAllIn") {
-    val p1 = java.nio.file.Files.createTempDirectory("graft-legacy").toString
-    val p2 = java.nio.file.Files.createTempDirectory("graft-direct").toString
-    val storer = new Legacy.ModelStorer(model, dict, p1): @annotation.nowarn("cat=deprecation")
-    storer.prepare()
-    storer.populateCorrelatedItems()
-    storer.populateSimilarItems()
-    model.storeAllIn(p2, dict)
-    val a = SimilarityStore.readSimilarItems(spark, p1).collect().toSet
-    val b = SimilarityStore.readSimilarItems(spark, p2).collect().toSet
-    a shouldBe b
-    SimilarityStore.readCorrelatedItems(spark, p1).count() shouldBe 3
+    def pairs(path: String) = SimilarityStore.readSimilarItems(spark, path).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val rebuilt = java.nio.file.Files.createTempDirectory("graft-rebuilt").toString
+    model.storeAllIn(rebuilt, dict)
+    val want = pairs(rebuilt)
+    want should not be empty
+    val resumed = SimilarityModel.fromStats(
+      graft.core.Incremental.fromOccurrences(occ.toDF("item_id", "reference_id")))
+    val models = Table(("model", "instance"),
+      ("fit on the occurrence log", model),
+      ("resumed from a statistics snapshot", resumed))
+    forAll(models) { (what, m) =>
+      withClue(s"$what: ") {
+        val p1 = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+        val p2 = java.nio.file.Files.createTempDirectory("graft-direct").toString
+        val storer = new Legacy.ModelStorer(m, dict, p1): @annotation.nowarn("cat=deprecation")
+        storer.prepare()
+        storer.populateCorrelatedItems()
+        storer.populateSimilarItems()
+        m.storeAllIn(p2, dict)
+        SimilarityStore.readSimilarItems(spark, p1).collect().toSet shouldBe
+          SimilarityStore.readSimilarItems(spark, p2).collect().toSet
+        val got = pairs(p1)
+        got.keySet shouldBe want.keySet
+        got.foreach { case (key, s) => assert(approx(s, want(key), 1e-12), s"$key") }
+        SimilarityStore.readCorrelatedItems(spark, p1).count() shouldBe 3
+      }
+    }
   }
 
   test("legacy function aliases delegate to the model store") {

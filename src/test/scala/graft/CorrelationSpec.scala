@@ -94,33 +94,6 @@ class CorrelationSpec extends SparkSpec {
       assert(approx(v, m(ia, ib), 1e-8), s"corr($a,$b): $v vs mllib ${m(ia, ib)}"))
   }
 
-  test("saltedCoMoments equals sparseCoMoments pair-for-pair (skew-resistant join)") {
-    val rnd = new scala.util.Random(13)
-    // one deliberately hot context (id 99) shared by every item
-    val rows = Seq.fill(60)((1L + rnd.nextInt(8).toLong, 1L + rnd.nextInt(5).toLong)) ++
-      (1L to 8L).map(i => (i, 99L))
-    val ctR = graft.core.Crosstab.build(rows.toDF("item_id", "reference_id"))
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    toMap(Correlation.saltedCoMoments(ctR, 4)) shouldBe toMap(Correlation.sparseCoMoments(ctR))
-  }
-
-  test("skew probe picks the salted plan on a hot-context log, plain otherwise") {
-    // hot log: one context shared by 3000 items (a quadratic bomb), plus
-    // a uniform background — the probe must choose salting
-    val hot = (1L to 3000L).map(i => (i, 777L)) ++
-      (1L to 500L).map(i => (i, 10L + i % 50))
-    val hotCt = Crosstab.build(hot.toDF("item_id", "reference_id"))
-    Correlation.probeSkew(hotCt, hotDegree = 1000) shouldBe Correlation.Salted(8)
-    // uniform log: max degree ~ tens — no salting
-    val rnd = new scala.util.Random(5)
-    val uni = Seq.fill(800)((rnd.nextInt(40).toLong, rnd.nextInt(100).toLong))
-    val uniCt = Crosstab.build(uni.toDF("item_id", "reference_id"))
-    Correlation.probeSkew(uniCt, hotDegree = 1000) shouldBe Correlation.NoSkew
-    // and the auto path is output-identical to the explicit one
-    pairMap(Correlation.sparsePairsAuto(uniCt)) shouldBe pairMap(Correlation.sparsePairs(uniCt))
-  }
-
   test("property: relational Pearson == dense witness on random occurrence logs (seed=42)") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 15) {

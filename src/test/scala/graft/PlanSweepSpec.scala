@@ -118,6 +118,19 @@ class PlanSweepSpec extends SparkSpec {
     here ++ nested
   }
 
+  test("registry: every oracle names a query of its pack, and no query name is in two packs") {
+    // `SparkEntry.queries` merges the packs with `toMap`, which would
+    // silently keep only the last of two equal names
+    for (pack <- SparkEntry.packs) {
+      val orphans = pack.oracleSql.keySet -- pack.queries.keySet
+      assert(orphans.isEmpty, s"${pack.getClass.getSimpleName}: oracle without a query: $orphans")
+    }
+    val twice = SparkEntry.packs.flatMap(_.queries.keys)
+      .groupBy(identity).collect { case (name, seen) if seen.size > 1 => name }
+    assert(twice.isEmpty, s"query names registered by two packs: $twice")
+    SparkEntry.queries.size shouldBe SparkEntry.packs.map(_.queries.size).sum
+  }
+
   test("no query plans an unpartitioned window or an unreduced single-partition exchange") {
     val saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

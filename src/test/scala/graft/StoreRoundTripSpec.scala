@@ -185,6 +185,39 @@ class StoreRoundTripSpec extends SparkSpec {
     // re-store is a full refresh (drop + recreate), not an accumulation
     JdbcStore.storeIn(dict, pairs, url)
     JdbcStore.readSimilarItems(spark, url).count() shouldBe 3L
+
+    // the model's JDBC face stores the same pair set as its parquet face
+    // and the windowed reference
+    val model = SimilarityModel.fit(Tables10.occ.toDF("item_id", "reference_id"))
+    val modelDict = (1L to 6L).map(i => (i, s"item-$i")).toDF("id", "key")
+    val modelUrl = s"jdbc:derby:$dir/model;create=true"
+    model.storeInJdbc(modelUrl, modelDict, k = 1.0)
+    val parquetDir = Files.createTempDirectory("graft-jdbc-parquet").toString
+    model.storeIn(parquetDir, modelDict, k = 1.0)
+    def pairSet(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaJdbc = pairSet(JdbcStore.readSimilarItems(spark, modelUrl))
+    viaJdbc should not be empty
+    viaJdbc shouldBe pairSet(SimilarityStore.readSimilarItems(spark, parquetDir))
+    viaJdbc shouldBe pairSet(graft.core.Neighbors
+      .scaledStdDevThreshold(model.fullPairs(lit(true)), 1.0))
+    JdbcStore.readCorrelatedItems(spark, modelUrl).count() shouldBe 6L
+  }
+
+  test("storeIn with an item predicate stores the windowed reference's rows for the selection") {
+    val dir = Files.createTempDirectory("graft-store-pred").toString
+    val model = SimilarityModel.fit(Tables10.occ.toDF("item_id", "reference_id"))
+    val dict = (1L to 6L).map(i => (i, s"item-$i")).toDF("id", "key")
+    val pred = col("item") % 2 === 0
+    model.storeIn(dir, dict, pred, k = 1.0)
+    def scores(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val got = scores(SimilarityStore.readSimilarItems(spark, dir))
+    val want = scores(graft.core.Neighbors
+      .scaledStdDevThreshold(model.fullPairs(pred), 1.0))
+    got should not be empty
+    got.keySet.map(_._1).foreach(a => (a % 2) shouldBe 0L)
+    got.keySet shouldBe want.keySet
+    got.foreach { case (key, v) => assert(approx(v, want(key)), s"$key") }
   }
 
   test("Crosstab.build is stream-capable: the same transform runs under readStream") {
