@@ -45,9 +45,10 @@ object Caches {
     * buffer itself is not thread-safe) — every `cacheOnce` that should be
     * released by this scope must run on the calling thread. A `cacheOnce`
     * issued from a thread spawned inside `body` escapes the scope and
-    * lives until `clearAll`. All streaming call sites (`foreachBatch`
-    * bodies) are single-threaded today; a future parallel batch must
-    * either scope per worker thread or release its caches explicitly. */
+    * lives until `clearAll`. The streaming call site — the one
+    * `foreachBatch` body, in `streaming.Ingest.start` — runs each batch
+    * on one thread; a future parallel batch must either scope per worker
+    * thread or release its caches explicitly. */
   def scoped[T](body: => T): T = {
     val prev = scope.get()
     val buf = scala.collection.mutable.Buffer.empty[DataFrame]

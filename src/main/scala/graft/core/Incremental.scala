@@ -98,8 +98,9 @@ object Incremental {
     * exact in binary64, so the zero test is exact), and the context
     * count must drop for contexts whose last cell disappears.
     *
-    * Operational note: `save` the snapshot between batches (or fold via
-    * `streaming.IncrementalIngest`, which does). Each in-session fold
+    * Operational note: `save` the snapshot between batches (or stream
+    * through `streaming.Ingest` with `IncrementalIngest.applyBatch`,
+    * which does). Each in-session fold
     * references the previous snapshot's plans several times, so chaining
     * MANY folds without persisting grows the logical plan
     * multiplicatively — the driver, not the data, becomes the limit. */

@@ -203,13 +203,13 @@ object Selection {
     require(iters >= 1, "logisticTrain: iters must be >= 1")
     val w = Array.fill(numBuckets)(0.0)
     val curve = Array.newBuilder[(Long, Double)]
-    for (iter <- 1 to iters) {
+    for (iter <- 1 to iters) graft.core.Caches.scoped {
       val wlit = typedlit(w.zipWithIndex.map { case (v, b) => b.toLong -> v }.toMap)
-      // cached per iteration (r13): the loss aggregate AND the gradient
-      // join both consume p — uncached, each iteration scored the
-      // feature table twice. Keyed on the weight-literal plan, so a
-      // re-invocation with the identical trajectory (bench reps) rides
-      // the same per-iteration caches; one narrow row per document.
+      // cached per iteration: the loss aggregate AND the gradient join
+      // both consume p — uncached, each iteration scored the feature
+      // table twice. p is read only inside its own iteration, so the
+      // scope releases it when the iteration ends: a run holds one
+      // narrow row per document, not one per document and iteration.
       val p = graft.core.Caches.cacheOnce(fb
         .groupBy(col("id"), col("y"))
         .agg(sum(col("c") * element_at(wlit, col("bucket"))).as("z"))

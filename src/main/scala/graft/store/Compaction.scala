@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -9,8 +9,10 @@ import org.apache.spark.sql.SparkSession
  * `MomentsLedger`, `TokenCountLedger`), the crawl stores (`Bm25Store`,
  * `FrontierStore`, `FrontierSchedule`), the dedup stores (`DedupStore`,
  * `LineDedupStore`, `ExactSubstrStore`), the `AnnStore` tables and the
- * `PipelineManifest`. This object alone knows the layout; a store
- * supplies only what a batch holds, how batches fold and how it serves.
+ * `PipelineManifest` — and the model snapshot of
+ * `streaming.IncrementalIngest`, which uses the version marker alone. This
+ * object alone knows the layout; a store supplies only what a batch
+ * holds, how batches fold and how it serves.
  *
  * LAYOUT: a table lives at `<root>/v<k>` with a `LATEST` marker naming
  * the served version. Each write lands as a `batch_<name>` directory
@@ -87,12 +89,20 @@ private[graft] object Compaction {
         s"no LATEST marker under $root — initialize the store first"))}"
 
   /** Advance the marker to `version` — the LAST step of every version
-    * write (init, compaction, manifest publish). */
-  private def commit(spark: SparkSession, root: String, version: Long): Unit = {
+    * write (init, compaction, manifest publish, model snapshot). The
+    * marker is written to a temporary file and renamed over `LATEST`: a
+    * crash inside an in-place rewrite would leave the marker empty or
+    * truncated, and every reader's parse would fail. The rename is atomic
+    * where the file system's overwriting rename is (HDFS); the local file
+    * system, which only hosts tests, deletes the old marker first. */
+  private[graft] def commit(spark: SparkSession, root: String, version: Long): Unit = {
     val f = fs(spark, root)
-    val out = f.create(markerPath(root), true)
+    val tmp = f.makeQualified(new Path(s"$root/_LATEST.tmp"))
+    val out = f.create(tmp, true)
     try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    FileContext.getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, f.makeQualified(markerPath(root)), Options.Rename.OVERWRITE)
   }
 
   /** Create an empty marker file (overwriting). */
@@ -203,8 +213,33 @@ private[graft] object Compaction {
     val next = currentVersion(spark, root).fold(0L)(_ + 1)
     write(s"$root/v$next")
     commit(spark, root, next)
-    if (next > 0) pruneBelow(spark, root, next - 1)
+    prune(spark, root, 2)
     next
+  }
+
+  private val VersionDir = """v(\d+)""".r
+
+  /** Retention: delete all but the newest `keepLast` versions at or below
+    * the marker (the marker version is always kept). Versions ABOVE the
+    * marker are in-flight leftovers of a crashed write, overwritten by its
+    * retry, and are left alone. Writers read only the marker version, so
+    * pruning is safe while they run; a reader that resolved an older
+    * marker keeps working only while its version is kept, which is why
+    * `advance` keeps 2. Returns the versions deleted. */
+  def prune(spark: SparkSession, root: String, keepLast: Int): Seq[Long] = {
+    require(keepLast >= 1, "keepLast must be at least 1")
+    currentVersion(spark, root).fold(Seq.empty[Long]) { latest =>
+      val f = fs(spark, root)
+      val drop = f.listStatus(new Path(root)).toSeq
+        .filter(_.isDirectory)
+        .map(_.getPath.getName)
+        .collect { case VersionDir(k) => k.toLong }
+        .filter(_ <= latest)
+        .sorted
+        .dropRight(keepLast)
+      drop.foreach(v => f.delete(new Path(s"$root/v$v"), true))
+      drop
+    }
   }
 
   private def leasePath(storePath: String) = new Path(s"$storePath/_writer_lease")
@@ -264,19 +299,5 @@ private[graft] object Compaction {
   def withLease[T](spark: SparkSession, storePath: String, owner: String)(body: => T): T = {
     acquireLease(spark, storePath, owner)
     try body finally releaseLease(spark, storePath)
-  }
-
-  /** Delete version directories strictly below `minKeep` — everything
-    * older than the immediately-previous version after a compaction. */
-  private def pruneBelow(spark: SparkSession, root: String, minKeep: Long): Unit = {
-    val f = fs(spark, root)
-    f.listStatus(new Path(root)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter { p =>
-        val nm = p.getName
-        nm.startsWith("v") && nm.drop(1).forall(_.isDigit) && nm.drop(1).toLong < minKeep
-      }
-      .foreach(p => f.delete(p, true))
   }
 }

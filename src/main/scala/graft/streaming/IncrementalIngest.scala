@@ -1,58 +1,39 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.core.{Caches, Crosstab, Incremental}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
+import graft.core.{Crosstab, Incremental}
+import graft.store.Compaction
 
 /**
- * Continuous model maintenance — the streaming face of the incremental
- * core (EXT-C5): fold `Incremental.updateCells` over a micro-batched
- * occurrence stream with `foreachBatch`, persisting the
- * sufficient-statistics snapshot after every batch. Each batch costs one
- * delta aggregate plus summary merges bounded by the batch's contexts;
- * the occurrence history is NEVER rescanned — this is the operational
- * loop the reference cannot run (it retrains from the full log on every
- * ingest, `/root/reference/propius/similarity.py:92-117`).
+ * Continuous model maintenance — the batch function of the incremental
+ * core (EXT-C5) for `Ingest.start`: fold `Incremental.updateCells` over a
+ * micro-batched occurrence stream, persisting the sufficient-statistics
+ * snapshot after every batch. Each batch costs one delta aggregate plus
+ * summary merges bounded by the batch's contexts; the occurrence history
+ * is NEVER rescanned — this is the operational loop the reference cannot
+ * run (it retrains from the full log on every ingest, propius
+ * `similarity.py:92-117`).
  *
- * Snapshot layout: versioned directories `$statePath/v{batchId}` with a
- * `LATEST` marker written LAST, so a crash mid-write leaves the previous
- * snapshot intact, and the streaming checkpoint makes batch redelivery
- * idempotent (re-writing the same version from the same input is an
- * overwrite with identical content).
- *
- * The per-batch fold caches its shared subplans; they are released after
- * each snapshot is on disk (the fold reads the PERSISTED previous
- * snapshot, not live plans, so dropping the cache is safe) — a
- * long-running ingest holds O(1) cache entries, not O(batches).
+ * Snapshot layout: the `Compaction` version layout — batch `k`'s snapshot
+ * in `$statePath/v<k>`, the `LATEST` marker committed LAST, so a crash
+ * mid-write leaves the previous snapshot served, and a redelivered batch
+ * at or below the marker is skipped. The fold reads the PERSISTED
+ * previous snapshot, not live plans, so the driver's release of the
+ * batch's caches once the snapshot is on disk is safe.
  */
 object IncrementalIngest {
 
-  private def marker(statePath: String) = s"$statePath/LATEST"
-
-  /** The latest durable snapshot version, if any. */
-  def latestVersion(spark: SparkSession, statePath: String): Option[Long] = {
-    val p = new Path(marker(statePath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
-
   /** Load the latest durable snapshot, if any. */
   def loadLatest(spark: SparkSession, statePath: String): Option[Incremental.Stats] =
-    latestVersion(spark, statePath).map(v => Incremental.load(spark, s"$statePath/v$v"))
+    Compaction.currentVersion(spark, statePath)
+      .map(v => Incremental.load(spark, s"$statePath/v$v"))
 
   /** Apply one occurrence micro-batch: fold into the latest snapshot,
     * persist the result as version `batchId`, advance the marker, then
-    * (optionally) prune superseded snapshots. Exposed for direct use
-    * (e.g. a nightly batch job shares the exact code path the stream
-    * runs). `keepLast = Some(k)` bounds on-disk state to the k newest
-    * durable snapshots — without it a long-running ingest grows
-    * `v{batchId}` directories without bound. */
+    * (optionally) prune superseded snapshots. `keepLast = Some(k)` bounds
+    * on-disk state to the k newest durable snapshots — without it a
+    * long-running ingest grows `v<batchId>` directories without bound. */
   def applyBatch(batch: DataFrame, batchId: Long, statePath: String,
                  keepLast: Option[Int] = None): Unit =
     applyCells(Crosstab.build(batch), batchId, statePath, keepLast)
@@ -67,7 +48,6 @@ object IncrementalIngest {
     * negative cells are dropped rather than folded into nonsense. */
   def applyCdcBatch(batch: DataFrame, batchId: Long, statePath: String,
                     keepLast: Option[Int] = None, opCol: String = "op"): Unit = {
-    import org.apache.spark.sql.functions._
     val cells = batch
       .select(col("item_id").cast("long").as("item"),
         col("reference_id").cast("long").as("ctx"),
@@ -81,81 +61,17 @@ object IncrementalIngest {
   private def applyCells(cells: DataFrame, batchId: Long, statePath: String,
                          keepLast: Option[Int]): Unit = {
     val spark = cells.sparkSession
+    val latest = Compaction.currentVersion(spark, statePath)
     // Exactly-once across crash/redelivery: the checkpoint may replay the
     // last uncommitted batch after the marker already advanced — a batch
     // at or below the marker is already folded in, so skip it.
-    if (latestVersion(spark, statePath).exists(_ >= batchId)) return
-    // Scoped, not clearAll: the snapshot is durable after save, so the
-    // fold's own cached subplans are released here — but concurrent
-    // serving queries on the same session keep theirs.
-    Caches.scoped {
-      val next = loadLatest(spark, statePath) match {
-        case Some(prev) => Incremental.updateCells(prev, cells)
-        case None => Incremental.fromCells(cells.where(org.apache.spark.sql.functions.col("cnt") > 0))
-      }
-      Incremental.save(next, s"$statePath/v$batchId")
+    if (latest.exists(_ >= batchId)) return
+    val next = latest.map(v => Incremental.load(spark, s"$statePath/v$v")) match {
+      case Some(prev) => Incremental.updateCells(prev, cells)
+      case None => Incremental.fromCells(cells.where(col("cnt") > 0))
     }
-    val p = new Path(marker(statePath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    keepLast.foreach(k => pruneSnapshots(spark, statePath, k))
-  }
-
-  /** Retention: delete all but the newest `keepLast` DURABLE snapshot
-    * versions (those at or below the marker — the marker version itself
-    * is always among the kept). Versions ABOVE the marker are in-flight
-    * crash leftovers awaiting redelivery and are left alone. Safe to run
-    * any time, including while the ingest is live: the fold only ever
-    * reads the marker version. Returns the versions deleted. */
-  def pruneSnapshots(spark: SparkSession, statePath: String,
-                     keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must be at least 1")
-    val dir = new Path(statePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestVersion(spark, statePath) match {
-      case None => Nil
-      case Some(latest) =>
-        if (!fs.exists(dir)) Nil
-        else {
-          val durable = fs.listStatus(dir).toSeq
-            .filter(_.isDirectory)
-            .map(_.getPath.getName)
-            .collect { case s if s.startsWith("v") && s.drop(1).forall(_.isDigit) =>
-              s.drop(1).toLong }
-            .filter(_ <= latest)
-            .sorted
-          val drop = durable.dropRight(keepLast)
-          drop.foreach(v => fs.delete(new Path(s"$statePath/v$v"), true))
-          drop
-        }
-    }
-  }
-
-  /** Start the ingest: `occurrences` is a STREAMING DataFrame with the
-    * canonical (item_id, reference_id) columns. `keepLast` as in
-    * `applyBatch` — pass Some(k) for bounded on-disk snapshot state. */
-  def start(occurrences: DataFrame, statePath: String,
-            checkpointPath: String, keepLast: Option[Int] = None): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit =
-      (batch, id) => applyBatch(batch, id, statePath, keepLast)
-    occurrences.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch(fn)
-      .start()
-  }
-
-  /** Start the CDC ingest: rows are (item_id, reference_id, op) with
-    * op ∈ {+1, −1} (see `applyCdcBatch`). */
-  def startCdc(occurrences: DataFrame, statePath: String,
-               checkpointPath: String, keepLast: Option[Int] = None,
-               opCol: String = "op"): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit =
-      (batch, id) => applyCdcBatch(batch, id, statePath, keepLast, opCol)
-    occurrences.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch(fn)
-      .start()
+    Incremental.save(next, s"$statePath/v$batchId")
+    Compaction.commit(spark, statePath, batchId)
+    keepLast.foreach(Compaction.prune(spark, statePath, _))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.store.Bm25Store
+import graft.streaming.Ingest
 import graft.operators.Retrieval
 import org.apache.spark.sql.functions._
 
@@ -66,8 +67,8 @@ class Bm25StoreSpec extends SparkSpec {
     val b0 = Seq((4L, "unrelated words entirely here"), (5L, ""))
     val b1 = Seq((6L, "spark spark spark vector"), (7L, "stream stream vector"))
     val mem = MemoryStream[(Long, String)]
-    val sq = graft.streaming.Bm25Ingest.start(
-      mem.toDF().toDF("doc_id", "text"), streamed, s"$dir/ckpt")
+    val sq = Ingest.start(mem.toDF().toDF("doc_id", "text"), s"$dir/ckpt")(
+      (b, id) => Bm25Store.append(b, streamed, Some(Ingest.batchName(id))))
     try {
       Seq(b0, b1).foreach { b => mem.addData(b: _*); sq.processAllAvailable() }
     } finally sq.stop()
@@ -78,7 +79,7 @@ class Bm25StoreSpec extends SparkSpec {
     top(streamed) shouldBe top(twin)
     val before = top(streamed)
     // crash-redelivery of batch 0: overwrites its own dirs, serving unchanged
-    graft.streaming.Bm25Ingest.applyBatch(b0.toDF("doc_id", "text"), 0L, streamed)
+    Bm25Store.append(b0.toDF("doc_id", "text"), streamed, Some(Ingest.batchName(0)))
     top(streamed) shouldBe before
     Bm25Store.stats(spark, streamed).collect()(0).getLong(0) shouldBe 7L
   }

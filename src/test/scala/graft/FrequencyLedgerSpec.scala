@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.store.FrequencyLedger
+import graft.streaming.Ingest
 
 /** CMS frequency ledger: lossless split-invariant folds, redelivery
   * idempotence, compaction invariance, the one-sided estimate guarantee
@@ -74,8 +75,8 @@ class FrequencyLedgerSpec extends SparkSpec {
     val b1 = Seq("a", "c", "c")
     FrequencyLedger.write(b0.toDF("k"), store, "k")
     val mem = MemoryStream[String]
-    val sq = graft.streaming.LedgerIngest.startFrequencies(
-      mem.toDF().toDF("k"), store, s"$dir/ckpt", "k")
+    val sq = Ingest.start(mem.toDF().toDF("k"), s"$dir/ckpt")(
+      (b, id) => FrequencyLedger.append(b, store, "k", Some(Ingest.batchName(id))))
     try {
       mem.addData(b1: _*); sq.processAllAvailable()
     } finally sq.stop()
@@ -83,8 +84,8 @@ class FrequencyLedgerSpec extends SparkSpec {
     val keys = Seq("a", "b", "c")
     est(store, keys) shouldBe est(whole, keys)
     val before = est(store, keys)
-    graft.streaming.LedgerIngest.applyFrequencyBatch(
-      b1.toDF("k"), 0L, store, "k") // crash redelivery
+    FrequencyLedger.append(
+      b1.toDF("k"), store, "k", Some(Ingest.batchName(0))) // crash redelivery
     est(store, keys) shouldBe before
   }
 }

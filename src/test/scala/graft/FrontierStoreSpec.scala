@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.store.FrontierStore
+import graft.streaming.Ingest
 
 /**
  * Frontier URL ledger laws (EXT-D24): folding deltas equals the one-shot
@@ -100,8 +101,10 @@ class FrontierStoreSpec extends SparkSpec {
     val b1 = (15L to 28L).map(entry)
     val mem = MemoryStream[(Long, String)]
     val entries = mem.toDF().toDF("doc_id", "url")
-    val sq = graft.streaming.FrontierIngest.start(entries, streamed,
-      s"$dir/fetch", s"$dir/ckpt")
+    def fold(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      FrontierStore.offer(b, streamed, Some(Ingest.batchName(id)))
+        .write.mode("overwrite").parquet(s"$dir/fetch/batch=$id")
+    val sq = Ingest.start(entries, s"$dir/ckpt")(fold)
     try {
       Seq(b0, b1).foreach { b => mem.addData(b: _*); sq.processAllAvailable() }
     } finally sq.stop()
@@ -116,8 +119,7 @@ class FrontierStoreSpec extends SparkSpec {
     seenMap(streamed) shouldBe seenMap(twin)
     // crash-redelivery of batch 0: identical fetch list, ledger unchanged
     val before = seenMap(streamed)
-    graft.streaming.FrontierIngest.applyBatch(
-      b0.toDF("doc_id", "url"), 0L, streamed, s"$dir/fetch")
+    fold(b0.toDF("doc_id", "url"), 0L)
     seenMap(streamed) shouldBe before
     fetchBatch(0) shouldBe f0
   }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.{Correlation, Crosstab, Incremental}
-import graft.streaming.IncrementalIngest
+import graft.store.Compaction
+import graft.streaming.{IncrementalIngest, Ingest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming model maintenance: folding micro-batches of occurrences into
@@ -15,7 +16,8 @@ class IncrementalIngestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
     val mem = MemoryStream[(Long, Long)]
     val occ = mem.toDF().toDF("item_id", "reference_id")
-    val sq = IncrementalIngest.start(occ, s"$dir/state", s"$dir/ckpt", keepLast = Some(1))
+    val sq = Ingest.start(occ, s"$dir/ckpt")(
+      IncrementalIngest.applyBatch(_, _, s"$dir/state", keepLast = Some(1)))
     val rnd = new scala.util.Random(13)
     val batches = Seq.fill(3)(
       Seq.fill(120)((rnd.nextInt(10).toLong, rnd.nextInt(15).toLong)))
@@ -27,7 +29,7 @@ class IncrementalIngestSpec extends SparkSpec {
     val want = Correlation.sparsePairs(
       Crosstab.build(batches.flatten.toDF("item_id", "reference_id")))
     pairMap(Incremental.pairs(got)) shouldBe pairMap(want)
-    IncrementalIngest.latestVersion(spark, s"$dir/state") shouldBe Some(2L)
+    Compaction.currentVersion(spark, s"$dir/state") shouldBe Some(2L)
     // retention rode along with the stream: only the marker version remains
     new java.io.File(s"$dir/state").listFiles().filter(_.isDirectory)
       .map(_.getName).toSeq shouldBe Seq("v2")
@@ -46,7 +48,7 @@ class IncrementalIngestSpec extends SparkSpec {
     val after = pairMap(Incremental.pairs(
       IncrementalIngest.loadLatest(spark, s"$dir/state").get))
     after shouldBe before
-    IncrementalIngest.latestVersion(spark, s"$dir/state") shouldBe Some(1L)
+    Compaction.currentVersion(spark, s"$dir/state") shouldBe Some(1L)
   }
 
   test("CDC ingest (signed ops) converges to the surviving multiset; redelivery idempotent") {
@@ -54,7 +56,8 @@ class IncrementalIngestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
     val mem = MemoryStream[(Long, Long, Int)]
     val occ = mem.toDF().toDF("item_id", "reference_id", "op")
-    val sq = IncrementalIngest.startCdc(occ, s"$dir/state", s"$dir/ckpt", keepLast = Some(2))
+    val sq = Ingest.start(occ, s"$dir/ckpt")(
+      IncrementalIngest.applyCdcBatch(_, _, s"$dir/state", keepLast = Some(2)))
     // batch 0: inserts only; batch 1: inserts + deletes of batch-0 rows;
     // batch 2: a delete and an insert of the SAME cell net to a move
     val b0 = Seq((1L, 10L, 1), (2L, 10L, 1), (1L, 11L, 1), (3L, 11L, 1), (1L, 10L, 1))
@@ -90,17 +93,17 @@ class IncrementalIngestSpec extends SparkSpec {
     def versionsOnDisk = new java.io.File(s"$dir/state").listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
     versionsOnDisk shouldBe Seq("v2", "v3") // 0 and 1 pruned as each batch landed
-    IncrementalIngest.latestVersion(spark, s"$dir/state") shouldBe Some(3L)
+    Compaction.currentVersion(spark, s"$dir/state") shouldBe Some(3L)
     // the retained latest serves the full folded history
     pairMap(Incremental.pairs(IncrementalIngest.loadLatest(spark, s"$dir/state").get)) shouldBe
       pairMap(Correlation.sparsePairs(
         Crosstab.build(batches.flatten.toDF("item_id", "reference_id"))))
     // explicit prune call: keepLast=1 leaves only the marker version
-    IncrementalIngest.pruneSnapshots(spark, s"$dir/state", 1) shouldBe Seq(2L)
+    Compaction.prune(spark, s"$dir/state", 1) shouldBe Seq(2L)
     versionsOnDisk shouldBe Seq("v3")
     // in-flight versions above the marker are never touched
     Incremental.save(IncrementalIngest.loadLatest(spark, s"$dir/state").get, s"$dir/state/v9")
-    IncrementalIngest.pruneSnapshots(spark, s"$dir/state", 1) shouldBe Seq.empty
+    Compaction.prune(spark, s"$dir/state", 1) shouldBe Seq.empty
     versionsOnDisk shouldBe Seq("v3", "v9")
   }
 
@@ -123,14 +126,15 @@ class IncrementalIngestSpec extends SparkSpec {
     graft.store.AnnStore.writeIvf(base.toDF("vec_id", "embedding"), cents, streamed)
     val mem = MemoryStream[(Long, Seq[Float])]
     val vstream = mem.toDF().toDF("vec_id", "embedding")
-    val sqIvf = graft.streaming.AnnIngest.startIvf(vstream, streamed, s"$streamed/ckpt_ivf")
+    val sqIvf = Ingest.start(vstream, s"$streamed/ckpt_ivf")((b, id) =>
+      graft.store.AnnStore.appendIvf(b, streamed, Some(Ingest.batchName(id))))
     try {
       deltas.foreach { d => mem.addData(d: _*); sqIvf.processAllAvailable() }
     } finally sqIvf.stop()
     // SRP side folds the same batches through the direct applyBatch face
     deltas.zipWithIndex.foreach { case (d, i) =>
-      graft.streaming.AnnIngest.applySrpBatch(
-        d.toDF("vec_id", "embedding"), i.toLong, streamed) }
+      graft.store.AnnStore.appendSrp(
+        d.toDF("vec_id", "embedding"), streamed, Some(Ingest.batchName(i))) }
 
     val rebuilt = java.nio.file.Files.createTempDirectory("graft_annfull").toString
     graft.store.AnnStore.writeSrp(all, planes, rebuilt)
@@ -145,15 +149,15 @@ class IncrementalIngestSpec extends SparkSpec {
       dump(graft.store.AnnStore.srpTopK(spark, rebuilt, queries, 3))
     // crash-redelivery: rewriting batch 0 with the same content is a no-op
     val servedBefore = dump(graft.store.AnnStore.ivfTopK(spark, streamed, queries, 2, 3))
-    graft.streaming.AnnIngest.applyIvfBatch(
-      deltas.head.toDF("vec_id", "embedding"), 0L, streamed)
+    graft.store.AnnStore.appendIvf(
+      deltas.head.toDF("vec_id", "embedding"), streamed, Some(Ingest.batchName(0)))
     dump(graft.store.AnnStore.ivfTopK(spark, streamed, queries, 2, 3)) shouldBe servedBefore
 
     // compaction: fold the committed stream batches into the NEXT
     // VERSION's single base batch (marker-last swap) — served top-k
     // identical, per-batch directories gone from the served version,
     // fewer files
-    def curDir(sub: String) = graft.store.Compaction.currentDir(spark, s"$streamed/$sub")
+    def curDir(sub: String) = Compaction.currentDir(spark, s"$streamed/$sub")
     def treeFiles(sub: String) = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(curDir(sub))).iterator().asScala
@@ -166,7 +170,7 @@ class IncrementalIngestSpec extends SparkSpec {
     dump(graft.store.AnnStore.srpTopK(spark, streamed, queries, 3)) shouldBe srpServedBefore
     dump(graft.store.AnnStore.ivfTopK(spark, streamed, queries, 2, 3)) shouldBe servedBefore
     for (sub <- Seq(graft.store.AnnStore.SrpBuckets, graft.store.AnnStore.IvfLists)) {
-      graft.store.Compaction.currentVersion(spark, s"$streamed/$sub") shouldBe Some(1L)
+      Compaction.currentVersion(spark, s"$streamed/$sub") shouldBe Some(1L)
       val dirs = new java.io.File(curDir(sub)).listFiles().filter(_.isDirectory)
         .map(_.getName).sorted.toSeq
       assert(dirs == Seq("batch_base"),

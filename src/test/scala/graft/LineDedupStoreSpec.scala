@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import graft.store.LineDedupStore
+import graft.streaming.Ingest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -141,8 +142,10 @@ class LineDedupStoreSpec extends SparkSpec {
     val b1 = Seq((21L, "promo banner\nsecond delta"), (23L, "fresh line\nalone"))
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
-    val sq = graft.streaming.LineDedupIngest.start(docs, streamed,
-      s"$dir/kept", s"$dir/ckpt", MaxDf)
+    def fold(b: DataFrame, id: Long): Unit =
+      LineDedupStore.dedupDelta(b, streamed, MaxDf, deltaId = Some(Ingest.batchName(id)))
+        .write.mode("overwrite").parquet(s"$dir/kept/batch=$id")
+    val sq = Ingest.start(docs, s"$dir/ckpt")(fold)
     try {
       Seq(b0, b1).foreach { b => mem.addData(b: _*); sq.processAllAvailable() }
     } finally sq.stop()
@@ -156,8 +159,7 @@ class LineDedupStoreSpec extends SparkSpec {
     val countsBefore = LineDedupStore.counts(spark, streamed)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // crash-redelivery of batch 0: logical no-op on ledger and kept output
-    graft.streaming.LineDedupIngest.applyBatch(b0.toDF("doc_id", "text"), 0L,
-      streamed, s"$dir/kept", MaxDf)
+    fold(b0.toDF("doc_id", "text"), 0L)
     LineDedupStore.counts(spark, streamed)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe countsBefore
     keptBatch(0) shouldBe k0

@@ -240,7 +240,7 @@ class PlanShapeSpec extends SparkSpec {
     val p = planOf(j)
     p should not include "ScalaUDF"
     p.toLowerCase should include("might_contain")
-    j.agg(sum("k")).head.getLong(0) shouldBe 6L
+    j.agg(sum("k")).head().getLong(0) shouldBe 6L
     // empty key side → exact empty result, no crash
     graft.operators.Joins.bloomSemiJoin(
       big, keys.where(col("key") < 0), "k", "key", expectedKeys = 100L).count() shouldBe 0L

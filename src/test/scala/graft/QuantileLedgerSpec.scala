@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.store.QuantileLedger
+import graft.streaming.Ingest
 
 /** Quantile-histogram ledger: exact log-linear bucket arithmetic,
   * lossless split-invariant folds, redelivery idempotence, compaction
@@ -108,16 +109,16 @@ class QuantileLedgerSpec extends SparkSpec {
     QuantileLedger.write(spark.emptyDataFrame
       .select(lit("x").as("k"), lit(1L).as("v")).where(lit(false)), store, "k", "v")
     val mem = MemoryStream[(String, Long)]
-    val sq = graft.streaming.LedgerIngest.startQuantiles(
-      mem.toDF().toDF("k", "v"), store, s"$dir/ckpt", "k", "v")
+    val sq = Ingest.start(mem.toDF().toDF("k", "v"), s"$dir/ckpt")(
+      (b, id) => QuantileLedger.append(b, store, "k", "v", Some(Ingest.batchName(id))))
     try {
       Seq(b0, b1).foreach { b => mem.addData(b: _*); sq.processAllAvailable() }
     } finally sq.stop()
     QuantileLedger.write((b0 ++ b1).toDF("k", "v"), whole, "k", "v")
     served(store) shouldBe served(whole)
     val before = served(store)
-    graft.streaming.LedgerIngest.applyQuantileBatch(
-      b0.toDF("k", "v"), 0L, store, "k", "v") // crash redelivery
+    QuantileLedger.append(
+      b0.toDF("k", "v"), store, "k", "v", Some(Ingest.batchName(0))) // crash redelivery
     served(store) shouldBe before
   }
 }

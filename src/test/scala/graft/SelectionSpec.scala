@@ -93,6 +93,16 @@ class SelectionSpec extends SparkSpec {
     again shouldBe curve.map(_._2).toSeq
   }
 
+  test("logisticTrain releases each iteration's score cache") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    def train(iters: Int) = Selection.logisticTrain(docs, col("source") === "seed",
+      iters = iters, numBuckets = 48).collect()
+    train(1)
+    val afterOne = persisted
+    train(5)
+    persisted shouldBe afterOne
+  }
+
   test("weights are deterministic across evaluations") {
     val again = Selection
       .dsirLogWeights(docs, col("source") === "seed", numBuckets = 64)

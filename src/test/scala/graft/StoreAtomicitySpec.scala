@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.store.{AnnStore, Compaction, DedupStore}
+import graft.streaming.Ingest
 
 /** The versioned marker-last swap (`Compaction`) and the store faces
   * built on it: reader atomicity across compaction, the crash window,
@@ -154,8 +155,10 @@ class StoreAtomicitySpec extends SparkSpec {
       (23L, "lorem ipsum dolor sit amet consectetur adipiscing elit"))
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
-    val sq = graft.streaming.DedupIngest.start(docs, streamed, s"$dir/kept",
-      s"$dir/ckpt", N, Perms, Bds, T)
+    def fold(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      DedupStore.dedupDelta(b, streamed, N, Perms, Bds, T, deltaId = Some(Ingest.batchName(id)))
+        .write.mode("overwrite").parquet(s"$dir/kept/batch=$id")
+    val sq = Ingest.start(docs, s"$dir/ckpt")(fold)
     try {
       Seq(b0, b1).foreach { b => mem.addData(b: _*); sq.processAllAvailable() }
     } finally sq.stop()
@@ -171,8 +174,7 @@ class StoreAtomicitySpec extends SparkSpec {
     keptBatch(1) shouldBe k1
     // crash-redelivery of batch 0: logical no-op on store and kept output
     val before = sigIds(streamed)
-    graft.streaming.DedupIngest.applyBatch(b0.toDF("doc_id", "text"), 0L,
-      streamed, s"$dir/kept", N, Perms, Bds, T)
+    fold(b0.toDF("doc_id", "text"), 0L)
     sigIds(streamed) shouldBe before
     keptBatch(0) shouldBe k0
   }

@@ -1,10 +1,19 @@
 package graft
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import java.io.{IOException, OutputStream}
+import java.net.URI
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataOutputStream, FileUtil,
+  FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.{Correlation, Crosstab, Incremental}
 import graft.operators.SimilaritySearch
 import graft.store._
+import graft.streaming.IncrementalIngest
 
 /** The two crash windows of the shared batch-store protocol
   * (`Compaction`), checked through every store's own write, append, read
@@ -14,6 +23,10 @@ import graft.store._
   *    to the read face, and the retry under the same name lands;
   *  - a compaction that wrote `v1` but never advanced `LATEST` leaves `v0`
   *    served, and the retry compacts cleanly.
+  *
+  * A third window is the marker write itself: a crash inside it must
+  * leave the previous marker whole, for the batch stores and the model
+  * snapshot alike.
   *
   * Each crash image is copied from a twin store that ran the real
   * operation, so the planted files hold rows the read face would show. */
@@ -182,4 +195,76 @@ class StoreCrashSpec extends SparkSpec {
       batchDirs(s"$root/v1") shouldBe Seq("batch_base")
     }
   }
+
+  test("a torn LATEST write leaves the previous version served: a batch store and the model snapshot") {
+    TornMarkerFs.register(spark.sparkContext.hadoopConfiguration)
+    val dir = s"${TornMarkerFs.Scheme}://${graft.core.Scratch.dir("crash_torn")}"
+    val store = s"$dir/ledger"
+    FrequencyLedger.write(scopedBase, store, "k")
+    FrequencyLedger.append(scopedDelta, store, "k", Some("d1"))
+    val before = dump(FrequencyLedger.sketch(spark, store))
+    TornMarkerFs.arm(store)
+    an[IOException] should be thrownBy FrequencyLedger.compact(spark, store)
+    Compaction.currentVersion(spark, s"$store/${FrequencyLedger.Root}") shouldBe Some(0L)
+    dump(FrequencyLedger.sketch(spark, store)) shouldBe before
+
+    val state = s"$dir/state"
+    val b0 = Seq((1L, 10L), (2L, 10L), (1L, 11L), (3L, 11L)).toDF("item_id", "reference_id")
+    IncrementalIngest.applyBatch(b0, 0L, state)
+    TornMarkerFs.arm(state)
+    an[IOException] should be thrownBy IncrementalIngest.applyBatch(
+      Seq((2L, 12L), (3L, 12L)).toDF("item_id", "reference_id"), 1L, state)
+    pairMap(Incremental.pairs(IncrementalIngest.loadLatest(spark, state).get)) shouldBe
+      pairMap(Correlation.sparsePairs(Crosstab.build(b0)))
+  }
 }
+
+/** The local file system under the test scheme `torn`, with one fault:
+  * once armed for a root, the next write of a `LATEST` marker file under
+  * it is torn — the file is created (truncating an existing one) and the
+  * write then fails, as a crash inside the write would leave it. */
+class TornMarkerFs extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = TornMarkerFs.Uri
+}) {
+  override def getScheme: String = TornMarkerFs.Scheme
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (!f.getName.contains("LATEST") || !TornMarkerFs.tear(f)) out
+    else {
+      out.close()
+      new FSDataOutputStream(new OutputStream {
+        def write(b: Int): Unit = throw new IOException(s"torn marker write: $f")
+      }, null)
+    }
+  }
+}
+
+object TornMarkerFs {
+  val Scheme = "torn"
+  val Uri: URI = URI.create(s"$Scheme:///")
+
+  private val armed = new AtomicReference[String]()
+
+  /** Tear the next marker write under `root`. */
+  def arm(root: String): Unit = armed.set(new Path(root).toUri.getPath)
+
+  private def tear(f: Path): Boolean = {
+    val root = armed.get()
+    root != null && f.toUri.getPath.startsWith(root) && armed.compareAndSet(root, null)
+  }
+
+  /** Serve the scheme through `FileSystem` (uncached, so every lookup
+    * sees the fault) and `FileContext`. */
+  def register(conf: Configuration): Unit = {
+    conf.set(s"fs.$Scheme.impl", classOf[TornMarkerFs].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+    conf.set(s"fs.AbstractFileSystem.$Scheme.impl", classOf[TornMarkerAfs].getName)
+  }
+}
+
+class TornMarkerAfs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new TornMarkerFs, conf, TornMarkerFs.Scheme, false)
